@@ -114,6 +114,40 @@ def _drop_hot_keys(df: DataFrame, keys: list[str], cap: int) -> DataFrame:
     return df.join(F.broadcast(hot), keys, "left_anti")
 
 
+def _shingle_overlaps(
+    docs: DataFrame,
+    n: int,
+    id_col: str,
+    text_col: str,
+    max_shingle_df: int | None,
+    persist: bool,
+) -> DataFrame:
+    """(doc_a, doc_b, inter, n_a, n_b) for every doc pair sharing a shingle,
+    doc_a < doc_b: the shingle equi-self-join over the df-capped universe
+    that :func:`ngram_jaccard_pairs` and :func:`containment_pairs` score.
+    ``inter`` is the shared-shingle count, ``n_a``/``n_b`` the sizes."""
+    raw = shingles(docs, n=n, id_col=id_col, text_col=text_col)
+    if persist:
+        raw = scoped_persist(raw)
+    sh = _drop_hot_keys(raw, ["shingle"], max_shingle_df) if max_shingle_df else raw
+    sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
+
+    a = sh.select(F.col(id_col).alias("doc_a"), "shingle")
+    b = sh.select(F.col(id_col).alias("doc_b"), "shingle")
+    inter = (
+        a.join(b, "shingle")
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count("*").alias("inter"))
+    )
+    sz_a = sizes.select(F.col(id_col).alias("doc_a"), F.col("n_sh").alias("n_a"))
+    sz_b = sizes.select(F.col(id_col).alias("doc_b"), F.col("n_sh").alias("n_b"))
+    # sz_a/sz_b are per-DOCUMENT size tables — O(corpus) rows, so no
+    # broadcast hint: AQE broadcasts at small scale and shuffles on the
+    # id key when the corpus outgrows a build side.
+    return inter.join(sz_a, "doc_a").join(sz_b, "doc_b")
+
+
 def ngram_jaccard_pairs(
     docs: DataFrame,
     threshold: float,
@@ -144,28 +178,8 @@ def ngram_jaccard_pairs(
     repeated small-input invocations — a foreachBatch sink calling this
     once per micro-batch — per-call persists would accumulate in the
     CacheManager for the session lifetime."""
-    raw = shingles(docs, n=n, id_col=id_col, text_col=text_col)
-    if persist:
-        raw = scoped_persist(raw)
-    sh = _drop_hot_keys(raw, ["shingle"], max_shingle_df) if max_shingle_df else raw
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
-
-    a = sh.select(F.col(id_col).alias("doc_a"), "shingle")
-    b = sh.select(F.col(id_col).alias("doc_b"), "shingle")
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("inter"))
-    )
-    sz_a = sizes.select(F.col(id_col).alias("doc_a"), F.col("n_sh").alias("n_a"))
-    sz_b = sizes.select(F.col(id_col).alias("doc_b"), F.col("n_sh").alias("n_b"))
-    # sz_a/sz_b are per-DOCUMENT size tables — O(corpus) rows, so no
-    # broadcast hint: AQE broadcasts at small scale and shuffles on the
-    # id key when the corpus outgrows a build side.
     return (
-        inter.join(sz_a, "doc_a")
-        .join(sz_b, "doc_b")
+        _shingle_overlaps(docs, n, id_col, text_col, max_shingle_df, persist)
         .select(
             "doc_a",
             "doc_b",
@@ -198,23 +212,7 @@ def containment_pairs(
     equi-self-join over the df-capped universe — the intersection is
     computed ONCE per unordered pair, then both directional ratios derive
     from it), same single-scan persist contract."""
-    raw = shingles(docs, n=n, id_col=id_col, text_col=text_col)
-    if persist:
-        raw = scoped_persist(raw)
-    sh = _drop_hot_keys(raw, ["shingle"], max_shingle_df) if max_shingle_df else raw
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
-
-    a = sh.select(F.col(id_col).alias("doc_a"), "shingle")
-    b = sh.select(F.col(id_col).alias("doc_b"), "shingle")
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("inter"))
-    )
-    sz_a = sizes.select(F.col(id_col).alias("doc_a"), F.col("n_sh").alias("n_a"))
-    sz_b = sizes.select(F.col(id_col).alias("doc_b"), F.col("n_sh").alias("n_b"))
-    scored = inter.join(sz_a, "doc_a").join(sz_b, "doc_b")
+    scored = _shingle_overlaps(docs, n, id_col, text_col, max_shingle_df, persist)
     # Emit both directions by exploding a 2-struct array, NOT a union of
     # two selects: a union would duplicate the whole candidate pipeline
     # (verified: 0 ReusedExchange), doubling the intersection cost.
@@ -309,6 +307,19 @@ def minhash_signatures(
     return sh.groupBy(id_col).agg(*mins)
 
 
+def _band_keys(bands: int, rows_per_band: int, hash_family: str = "xxhash64") -> list:
+    """One LSH bucket-key column ``band_{b}`` per band over the ``mh_*``
+    signature columns. In the portable md5 mode the raw ':'-joined band
+    value IS the bucket key (band hashing is only a width optimization),
+    so a DuckDB twin can rebuild the buckets verbatim."""
+
+    def key(b: int):
+        mh = [F.col(f"mh_{b * rows_per_band + j}") for j in range(rows_per_band)]
+        return F.concat_ws(":", *mh) if hash_family == "md5" else F.xxhash64(*mh)
+
+    return [key(b).alias(f"band_{b}") for b in range(bands)]
+
+
 def minhash_lsh_pairs(
     docs: DataFrame,
     threshold: float,
@@ -378,24 +389,7 @@ def minhash_lsh_pairs(
             with_arr_col=True,
         )
     )
-    if hash_family == "md5":
-        # portable mode: the raw ':'-joined band value IS the bucket key
-        # (band hashing is only a width optimization) so a DuckDB twin
-        # can rebuild the buckets verbatim
-        band_cols = [
-            F.concat_ws(
-                ":", *[F.col(f"mh_{b * rows_per_band + j}") for j in range(rows_per_band)]
-            ).alias(f"band_{b}")
-            for b in range(bands)
-        ]
-    else:
-        band_cols = [
-            F.xxhash64(
-                *[F.col(f"mh_{b * rows_per_band + j}") for j in range(rows_per_band)]
-            ).alias(f"band_{b}")
-            for b in range(bands)
-        ]
-    banded = sig.select(F.col(id_col), "n_sh", *band_cols)
+    banded = sig.select(F.col(id_col), "n_sh", *_band_keys(bands, rows_per_band, hash_family))
     stacked = banded.select(
         F.col(id_col),
         "n_sh",
@@ -505,15 +499,11 @@ def minhash_estimate_audit(
             with_size_col=True,
         )
     )
-    band_cols = [
-        F.concat_ws(
-            ":", *[F.col(f"mh_{b * rpb + j}") for j in range(rpb)]
-        ).alias(f"band_{b}")
-        for b in range(bands)
-    ]
     stacked = sig.select(
         F.col(id_col),
-        F.posexplode(F.array(*[c for c in band_cols])).alias("band_idx", "band_hash"),
+        F.posexplode(F.array(*_band_keys(bands, rpb, "md5"))).alias(
+            "band_idx", "band_hash"
+        ),
     )
     candidates = (
         stacked.select(F.col(id_col).alias("doc_a"), "band_idx", "band_hash")
@@ -1333,13 +1323,7 @@ def incremental_neardup_filter(
             side, num_hashes=num_hashes, n=n, id_col=id_col,
             text_col=text_col, shingle_df=capped_sh,
         )
-        band_cols = [
-            F.xxhash64(
-                *[F.col(f"mh_{b * rows_per_band + j}") for j in range(rows_per_band)]
-            ).alias(f"band_{b}")
-            for b in range(bands)
-        ]
-        return sig.select(F.col(id_col).alias(alias), *band_cols).select(
+        return sig.select(F.col(id_col).alias(alias), *_band_keys(bands, rows_per_band)).select(
             F.col(alias),
             F.posexplode(F.array(*[F.col(f"band_{b}") for b in range(bands)])).alias(
                 "band_idx", "band_hash"
@@ -1406,25 +1390,9 @@ def minhash_band_table(
         hash_family=hash_family,
     )
     sig_arr = F.array(*[F.col(f"mh_{i}") for i in range(num_hashes)])
-    if hash_family == "md5":
-        # portable mode: raw ':'-joined band values ARE the bucket keys
-        # (band hashing is only a width optimization) so a DuckDB twin
-        # can rebuild the index verbatim — same trick as minhash_lsh_pairs
-        band_cols = [
-            F.concat_ws(
-                ":", *[F.col(f"mh_{b * rows_per_band + j}").cast("string")
-                       for j in range(rows_per_band)]
-            ).alias(f"band_{b}")
-            for b in range(bands)
-        ]
-    else:
-        band_cols = [
-            F.xxhash64(
-                *[F.col(f"mh_{b * rows_per_band + j}") for j in range(rows_per_band)]
-            ).alias(f"band_{b}")
-            for b in range(bands)
-        ]
-    banded = sig.select(F.col(id_col), sig_arr.alias("sig"), *band_cols)
+    banded = sig.select(
+        F.col(id_col), sig_arr.alias("sig"), *_band_keys(bands, rows_per_band, hash_family)
+    )
     return banded.select(
         F.col(id_col),
         "sig",

@@ -286,33 +286,45 @@ def kmv_distinct(
     window form keeps the exact twin trivially identical.
 
     Output: (group, n_exact, n_est, rel_err) — est rounded 2, err 6.
+    Raises ValueError for k < 2 (see :func:`_kmv_estimates`).
     """
-    hashed = (
-        df.select(
-            F.col(group_col).alias("__g"),
-            F.conv(
-                F.substring(F.md5(F.col(value_col).cast("string")), 1, 15), 16, 10
-            )
-            .cast("bigint")
-            .alias("__h"),
-        )
-        .distinct()
-    )
-    w = Window.partitionBy("__g").orderBy("__h")
-    per = hashed.withColumn("__rn", F.row_number().over(w)).groupBy("__g").agg(
-        F.count("*").alias("n_exact"),
-        F.max(F.when(F.col("__rn") == k, F.col("__h"))).alias("__kth"),
-    )
-    est = F.when(
-        F.col("__kth").isNull(), F.col("n_exact").cast("double")
-    ).otherwise(
-        F.lit(float(k - 1)) * F.pow(F.lit(2.0), F.lit(60.0)) / F.col("__kth")
-    )
+    per = _kmv_estimates(_kmv_hashes(df, group_col, value_col), k)
+    est = F.col("__est")
     return per.select(
         F.col("__g").alias(group_col),
-        F.col("n_exact").cast("long").alias("n_exact"),
+        F.col("__n").cast("long").alias("n_exact"),
         F.round(est, 2).alias("n_est"),
-        F.round(
-            F.abs(est - F.col("n_exact")) / F.col("n_exact"), 6
-        ).alias("rel_err"),
+        F.round(F.abs(est - F.col("__n")) / F.col("__n"), 6).alias("rel_err"),
     )
+
+
+def _kmv_hashes(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
+    """Distinct (__g, __h) pairs: the group and the 60-bit md5-prefix
+    hash of the value — the KMV hash shared by :func:`kmv_distinct` and
+    the streaming KMV ingest, so their sketches agree exactly."""
+    return df.select(
+        F.col(group_col).alias("__g"),
+        F.conv(F.substring(F.md5(F.col(value_col).cast("string")), 1, 15), 16, 10)
+        .cast("bigint")
+        .alias("__h"),
+    ).distinct()
+
+
+def _kmv_estimates(hashes: DataFrame, k: int) -> DataFrame:
+    """(__g, __n, __est) per group of distinct (__g, __h) pairs: __n
+    counts the group's hashes, __est is the KMV estimate — the exact
+    count below k hashes, else (k-1) * 2^60 / h_(k).
+
+    k < 2 is a ValueError: with k = 1 the numerator (k-1) is 0 and every
+    group past one distinct value would read an estimate of 0."""
+    if k < 2:
+        raise ValueError(f"KMV needs k >= 2, got k={k}")
+    w = Window.partitionBy("__g").orderBy("__h")
+    per = hashes.withColumn("__rn", F.row_number().over(w)).groupBy("__g").agg(
+        F.count("*").alias("__n"),
+        F.max(F.when(F.col("__rn") == k, F.col("__h"))).alias("__kth"),
+    )
+    est = F.when(F.col("__kth").isNull(), F.col("__n").cast("double")).otherwise(
+        F.lit(float(k - 1)) * F.pow(F.lit(2.0), F.lit(60.0)) / F.col("__kth")
+    )
+    return per.select("__g", "__n", est.alias("__est"))

@@ -11,9 +11,19 @@ oracle can check the semantics.
 Scale notes: file-source streaming with maxFilesPerTrigger handles
 backfill; watermarks bound state; the foreachBatch upsert keeps sink
 idempotency on retries (batch_id is available for exactly-once sinks).
+
+The ``*IngestForeachBatch`` sinks keep their state in batch stores:
+parquet directories partitioned by ``__batch_id``, one partition per
+micro-batch. One replay contract covers them all: a micro-batch
+rewrites only its own partition (dynamic partition overwrite), and an
+ingest that reads its own store leaves the current batch out, so a
+replayed micro-batch rewrites identical rows. It is implemented once,
+in :func:`_write_batch` and :func:`_read_store`.
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -261,21 +271,78 @@ class UpsertForeachBatch:
         self.batches_seen.append(batch_id)
         self.sink.write(batch_df, self.name)
 
+
+def _write_batch(df: DataFrame, batch_id: int, path: str, *lead_cols: str) -> None:
+    """Write ``df`` as micro-batch ``batch_id`` of the batch store at ``path``.
+
+    The replay contract of every ``*IngestForeachBatch`` sink: the rows
+    land in their own ``__batch_id=<id>`` partition (below any
+    ``lead_cols`` partitions) through DYNAMIC partition overwrite, so
+    writing a batch id again replaces that batch's slice and leaves
+    every other batch untouched. foreachBatch may re-run a micro-batch
+    after a failure; a sink that reads its own store while ingesting
+    does so through :func:`_read_store` with ``exclude_batch`` set to
+    the current id, so the replay sees the same state the first run saw
+    (not its own earlier output, which every row would self-match). The
+    per-batch computations are deterministic, so a replay rewrites the
+    slice with identical rows: nothing is double-counted, and no row
+    moves between stores."""
+    (
+        df.withColumn("__batch_id", F.lit(batch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*lead_cols, "__batch_id")
+        .parquet(path)
+    )
+
+
+def _read_store(
+    spark: SparkSession, path: str, exclude_batch: int | None = None
+) -> DataFrame | None:
+    """The batch store at ``path`` without its ``__batch_id`` column,
+    leaving out batch ``exclude_batch`` when given; None while the
+    directory holds no parquet data file — before the first write, and
+    after only empty batches (an empty batch writes no partition)."""
+    if not any(f.endswith(".parquet") for _, _, fs in os.walk(path) for f in fs):
+        return None
+    store = spark.read.parquet(path)
+    if exclude_batch is not None:
+        store = store.filter(F.col("__batch_id") != exclude_batch)
+    return store.drop("__batch_id")
+
+
+def _read_merged(spark: SparkSession, path: str) -> DataFrame:
+    """Every batch of the store at ``path``, for a read-side merge; an
+    empty store is a ValueError, not a Spark schema-inference error."""
+    store = _read_store(spark, path)
+    if store is None:
+        raise ValueError("empty store: no batches ingested yet")
+    return store
+
+
+def _write_indexed_batch(
+    survivors: DataFrame, batch_id: int, history_dir: str, index_dir: str, index_fn
+) -> None:
+    """Write ``survivors`` as batch ``batch_id`` of the history store, then
+    ``index_fn`` of that batch AS READ BACK from its own partition
+    directory as the same batch of the index store, so the index derives
+    from exactly what history now holds. A batch without survivors writes
+    no partition and has nothing to index."""
+    _write_batch(survivors, batch_id, history_dir)
+    back = _read_store(survivors.sparkSession, f"{history_dir}/__batch_id={batch_id}")
+    if back is not None:
+        _write_batch(index_fn(back), batch_id, index_dir)
+
+
 class DedupIngestForeachBatch:
     """Streaming corpus ingest with incremental near-dup filtering — the
     daily-crawl loop as a foreachBatch sink: every micro-batch is deduped
     within itself (smaller doc id wins) and against the ACCUMULATED
     history (operators/dedup.py::incremental_neardup_filter, asymmetric
     band join: history↔history pairs are never generated), survivors are
-    appended to the history parquet, and the history feeds the next
-    batch's filter.
-
-    Replay safety: foreachBatch may re-run a micro-batch after a failure,
-    and by then the batch's own rows are already IN history — so the
-    history side always EXCLUDES the current batch id before filtering.
-    The filter is deterministic, so a replay reproduces the original
-    survivor set and dynamic partition overwrite rewrites the partition
-    with identical rows (append-idempotent, no self-dedup data loss).
+    appended to the history store, and the history feeds the next
+    batch's filter. Replays follow the batch-store contract
+    (:func:`_write_batch`).
 
     Cache safety: the filters run with persist=False — a long-running
     stream invoking a persisting operator once per micro-batch would pin
@@ -306,17 +373,12 @@ class DedupIngestForeachBatch:
         self.batches_seen: list[int] = []
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
-        from pyspark.sql import functions as F
-
         from sheetsetl_spark.operators.dedup import (
             incremental_neardup_filter,
             ngram_jaccard_pairs,
         )
 
         self.batches_seen.append(batch_id)
-        spark = batch_df.sparkSession
 
         # batch-internal near-dups: smaller id wins (same priority rule as
         # semantic_dedup); new-vs-new pairs are NOT generated by the
@@ -335,16 +397,8 @@ class DedupIngestForeachBatch:
             "left_anti",
         )
 
-        if os.path.isdir(self.history_dir) and any(
-            f.endswith(".parquet") for _, _, fs in os.walk(self.history_dir) for f in fs
-        ):
-            history = (
-                spark.read.parquet(self.history_dir)
-                # replayed batch: its own rows are already in history —
-                # exclude them or every doc self-matches and is dropped
-                .filter(F.col("__batch_id") != batch_id)
-                .drop("__batch_id")
-            )
+        history = _read_store(batch_df.sparkSession, self.history_dir, batch_id)
+        if history is not None:
             new_docs = incremental_neardup_filter(
                 new_docs,
                 history,
@@ -356,13 +410,7 @@ class DedupIngestForeachBatch:
                 max_shingle_df=self.max_shingle_df,
                 persist=False,
             )
-        (
-            new_docs.withColumn("__batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch_id")
-            .parquet(self.history_dir)
-        )
+        _write_batch(new_docs, batch_id, self.history_dir)
 
 class SignatureDedupIngestForeachBatch:
     """The index-maintained variant of :class:`DedupIngestForeachBatch`:
@@ -375,10 +423,8 @@ class SignatureDedupIngestForeachBatch:
 
     Explicitly approximate (minhash agreement estimates Jaccard to
     ~sqrt(J(1-J)/num_hashes)); use DedupIngestForeachBatch when exact
-    verification is worth re-scanning history. Same replay contract:
-    both the history partition and the index partition are keyed by
-    batch id and excluded from the filter on replay, then rewritten via
-    dynamic partition overwrite.
+    verification is worth re-scanning history. History and index are
+    both batch stores (:func:`_write_batch`).
 
     Known drift vs the one-shot c38 oracle twin: ``max_shingle_df`` is
     applied PER BATCH when each batch's signatures are built, while the
@@ -412,16 +458,7 @@ class SignatureDedupIngestForeachBatch:
         self.max_bucket_size = max_bucket_size
         self.batches_seen: list[int] = []
 
-    def _has_parquet(self, path: str) -> bool:
-        import os
-
-        return os.path.isdir(path) and any(
-            f.endswith(".parquet") for _, _, fs in os.walk(path) for f in fs
-        )
-
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
         from sheetsetl_spark.operators.dedup import (
             incremental_neardup_filter_sig,
             minhash_band_table,
@@ -429,7 +466,6 @@ class SignatureDedupIngestForeachBatch:
         )
 
         self.batches_seen.append(batch_id)
-        spark = batch_df.sparkSession
 
         # intra-batch near-dups: smaller id wins (exact Jaccard — the
         # batch is small, so the shingle join is cheap)
@@ -442,12 +478,8 @@ class SignatureDedupIngestForeachBatch:
             self.id_col, "left_anti",
         )
 
-        if self._has_parquet(self.index_dir):
-            index = (
-                spark.read.parquet(self.index_dir)
-                .filter(F.col("__batch_id") != batch_id)  # replay safety
-                .drop("__batch_id")
-            )
+        index = _read_store(batch_df.sparkSession, self.index_dir, batch_id)
+        if index is not None:
             new_docs = incremental_neardup_filter_sig(
                 new_docs, index,
                 threshold=self.threshold, num_hashes=self.num_hashes,
@@ -456,34 +488,13 @@ class SignatureDedupIngestForeachBatch:
                 max_bucket_size=self.max_bucket_size,
             )
 
-        (
-            new_docs.withColumn("__batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch_id")
-            .parquet(self.history_dir)
-        )
-        if not self._has_parquet(self.history_dir):
-            # An empty FIRST micro-batch writes no parquet data files, so
-            # the survivors read-back below would fail schema inference —
-            # and there is nothing to index anyway.
-            return
-        # index the SURVIVORS (read back from the just-written partition
-        # so the index derives from exactly what history now holds)
-        survivors = spark.read.parquet(self.history_dir).filter(
-            F.col("__batch_id") == batch_id
-        ).drop("__batch_id")
-        (
-            minhash_band_table(
+        _write_indexed_batch(
+            new_docs, batch_id, self.history_dir, self.index_dir,
+            lambda survivors: minhash_band_table(
                 survivors, num_hashes=self.num_hashes, bands=self.bands,
                 n=self.n, id_col=self.id_col,
                 max_shingle_df=self.max_shingle_df,
-            )
-            .withColumn("__batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch_id")
-            .parquet(self.index_dir)
+            ),
         )
 
 
@@ -498,11 +509,8 @@ class EmbeddingDedupIngestForeachBatch:
     O(new + collisions) with no history rescan.
 
     Intra-batch near-dups resolve smaller-id-wins via the batch-local
-    pair finder (the batch is small; its band join is cheap). Replay
-    contract matches the other ingests: history and index partitions are
-    keyed by __batch_id, excluded from the filter on replay, and
-    rewritten via dynamic partition overwrite — re-running a batch id
-    is idempotent.
+    pair finder (the batch is small; its band join is cheap). History
+    and index are both batch stores (:func:`_write_batch`).
 
     Banding is PINNED at construction (default 32/4): the stored index
     must be self-consistent across batches — per-batch auto-derivation
@@ -535,16 +543,7 @@ class EmbeddingDedupIngestForeachBatch:
         self.max_bucket_size = max_bucket_size
         self.batches_seen: list[int] = []
 
-    def _has_parquet(self, path: str) -> bool:
-        import os
-
-        return os.path.isdir(path) and any(
-            f.endswith(".parquet") for _, _, fs in os.walk(path) for f in fs
-        )
-
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
         from sheetsetl_spark.operators.dedup import (
             embedding_band_index,
             embedding_neardup_pairs,
@@ -552,7 +551,6 @@ class EmbeddingDedupIngestForeachBatch:
         )
 
         self.batches_seen.append(batch_id)
-        spark = batch_df.sparkSession
 
         # intra-batch near-dups: smaller id wins
         intra = embedding_neardup_pairs(
@@ -565,12 +563,8 @@ class EmbeddingDedupIngestForeachBatch:
             self.id_col, "left_anti",
         )
 
-        if self._has_parquet(self.index_dir):
-            index = (
-                spark.read.parquet(self.index_dir)
-                .filter(F.col("__batch_id") != batch_id)  # replay safety
-                .drop("__batch_id")
-            )
+        index = _read_store(batch_df.sparkSession, self.index_dir, batch_id)
+        if index is not None:
             new_vecs = incremental_embedding_neardup_filter(
                 new_vecs, index,
                 threshold=self.threshold, num_planes=self.num_planes,
@@ -578,30 +572,12 @@ class EmbeddingDedupIngestForeachBatch:
                 vec_col=self.vec_col, max_bucket_size=self.max_bucket_size,
             )
 
-        (
-            new_vecs.withColumn("__batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch_id")
-            .parquet(self.history_dir)
-        )
-        if not self._has_parquet(self.history_dir):
-            # empty FIRST batch: no data files -> nothing to index, and
-            # the read-back below would fail schema inference
-            return
-        survivors = spark.read.parquet(self.history_dir).filter(
-            F.col("__batch_id") == batch_id
-        ).drop("__batch_id")
-        (
-            embedding_band_index(
+        _write_indexed_batch(
+            new_vecs, batch_id, self.history_dir, self.index_dir,
+            lambda survivors: embedding_band_index(
                 survivors, num_planes=self.num_planes, bands=self.bands,
                 dim=self.dim, id_col=self.id_col, vec_col=self.vec_col,
-            )
-            .withColumn("__batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch_id")
-            .parquet(self.index_dir)
+            ),
         )
 
 
@@ -615,8 +591,6 @@ def _live_bits(df: DataFrame, hash_col: str) -> int:
     magnitude, not width — a -1 hash has bit_length 1 but occupies all
     64 stored bits). Empty frame → 0 (caller floors at ``bands``).
     """
-    from pyspark.sql import functions as F
-
     row = df.agg(
         F.max(hash_col).alias("mx"), F.min(hash_col).alias("mn")
     ).collect()[0]
@@ -640,7 +614,7 @@ class MediaDedupIngestForeachBatch:
     (multimodal.incremental_hamming_neardup_filter); survivors' media
     rows append to history and their HASHES (not payloads) to the
     index, so the index stays tiny however large the media bytes are.
-    Same __batch_id replay-idempotence contract as the other ingests."""
+    History and index are both batch stores (:func:`_write_batch`)."""
 
     def __init__(
         self,
@@ -671,32 +645,16 @@ class MediaDedupIngestForeachBatch:
         self.hash_bits = hash_bits
         self.batches_seen: list[int] = []
 
-    def _has_parquet(self, path: str) -> bool:
-        import os
-
-        return os.path.isdir(path) and any(
-            f.endswith(".parquet") for _, _, fs in os.walk(path) for f in fs
-        )
-
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
         from sheetsetl_spark.operators import multimodal as mm
 
         self.batches_seen.append(batch_id)
-        spark = batch_df.sparkSession
         fp = self.fingerprint_fn or mm.image_dhash
 
         hashes = fp(batch_df).select(
             self.id_col, self.hash_col
         ).localCheckpoint(eager=False)
-        index = None
-        if self._has_parquet(self.index_dir):
-            index = (
-                spark.read.parquet(self.index_dir)
-                .filter(F.col("__batch_id") != batch_id)  # replay safety
-                .drop("__batch_id")
-            )
+        index = _read_store(batch_df.sparkSession, self.index_dir, batch_id)
         hash_bits = self.hash_bits
         if hash_bits is None:
             # derive the live width: max hash over batch + index (the
@@ -748,25 +706,9 @@ class MediaDedupIngestForeachBatch:
         survivors = batch_df.join(
             keep.select(self.id_col), self.id_col, "left_semi"
         )
-        (
-            survivors.withColumn("__batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch_id")
-            .parquet(self.history_dir)
-        )
-        if not self._has_parquet(self.history_dir):
-            return  # empty first batch: nothing to index
-        back = spark.read.parquet(self.history_dir).filter(
-            F.col("__batch_id") == batch_id
-        ).drop("__batch_id")
-        (
-            fp(back).select(self.id_col, self.hash_col)
-            .withColumn("__batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch_id")
-            .parquet(self.index_dir)
+        _write_indexed_batch(
+            survivors, batch_id, self.history_dir, self.index_dir,
+            lambda back: fp(back).select(self.id_col, self.hash_col),
         )
 
 
@@ -779,9 +721,9 @@ class IvfIndexIngestForeachBatch:
     index grows. The companion of SignatureDedupIngestForeachBatch on
     the vector side.
 
-    Replay contract (same as the dedup ingests): rows carry __batch_id
-    and writes use dynamic partition overwrite on (cent_id, __batch_id),
-    so a replayed micro-batch rewrites its own slice idempotently.
+    The index is a batch store (:func:`_write_batch`) with ``cent_id``
+    as lead partition column: the (cent_id, __batch_id) layout
+    write_ivf_index builds, so a replay rewrites its own slice.
 
     Fixed-geometry caveat (documented, inherent to IVF): centroids are
     frozen at build time; if the embedding distribution drifts, rebuild
@@ -796,7 +738,6 @@ class IvfIndexIngestForeachBatch:
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql import Window
-        from pyspark.sql import functions as F
 
         from sheetsetl_spark.operators.similarity import (
             _centroids_path,
@@ -819,14 +760,8 @@ class IvfIndexIngestForeachBatch:
             .withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
             .select("cent_id", "vec_id", "v", "vn")
-            .withColumn("__batch_id", F.lit(batch_id))
         )
-        (
-            assigned.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("cent_id", "__batch_id")
-            .parquet(self.index_dir)
-        )
+        _write_batch(assigned, batch_id, self.index_dir, "cent_id")
 
 
 class SketchIngestForeachBatch:
@@ -834,16 +769,13 @@ class SketchIngestForeachBatch:
 
     Each micro-batch's token stream reduces to its (depth, bucket, cnt)
     cell increments (operators/text.py::cms_cells) and is written to the
-    sketch store partitioned by batch id — CMS is a LINEAR sketch, so
-    the groupBy-sum merge of all partitions is EXACTLY the sketch a
+    sketch batch store (:func:`_write_batch`) — CMS is a LINEAR sketch,
+    so the groupBy-sum merge of all batches is EXACTLY the sketch a
     one-shot build over the full history would produce (no approximation
-    drift from incremental maintenance; tested). Per-batch cost is one
-    scan of the batch plus a <= depth x width write: nothing rescans
-    history, the shape that holds when history is 100 TB.
-
-    Replay contract: dynamic partition overwrite keyed by batch id —
-    reprocessing a batch rewrites its own cell partition instead of
-    double-counting (tested).
+    drift from incremental maintenance; tested), and a replayed batch
+    is not double-counted. Per-batch cost is one scan of the batch plus
+    a <= depth x width write: nothing rescans history, the shape that
+    holds when history is 100 TB.
 
     Read side: :meth:`merged_sketch` / :meth:`estimates` — heavy-hitter
     estimates from the merged store with the usual CMS guarantee
@@ -864,27 +796,17 @@ class SketchIngestForeachBatch:
         self.batches_seen: list[int] = []
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
         from sheetsetl_spark.operators.text import cms_cells
 
         self.batches_seen.append(batch_id)
         cells = cms_cells(
             batch_df, width=self.width, depth=self.depth, text_col=self.text_col
         )
-        (
-            cells.withColumn("__batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch_id")
-            .parquet(self.sketch_dir)
-        )
+        _write_batch(cells, batch_id, self.sketch_dir)
 
     def merged_sketch(self, spark) -> DataFrame:
-        from pyspark.sql import functions as F
-
         return (
-            spark.read.parquet(self.sketch_dir)
+            _read_merged(spark, self.sketch_dir)
             .groupBy("depth", "bucket")
             .agg(F.sum("cnt").alias("cnt"))
         )
@@ -910,18 +832,16 @@ class KmvIngestForeachBatch:
     drawn from each part's own k smallest (any hash outside a batch's
     k-min set is dominated by k batch-local hashes, hence by k global
     ones). So each micro-batch stores only its per-group k-min DISTINCT
-    (group, hash) set — bounded at k rows per group per batch — and the
-    read-side merge (distinct -> per-group k-min) is EXACTLY the sketch
-    a one-shot build over the full history would produce: no drift from
-    incremental maintenance, tested against kmv_distinct's n_est.
+    (group, hash) set in the batch store (:func:`_write_batch`) —
+    bounded at k rows per group per batch — and the read-side merge
+    (distinct -> per-group k-min) is EXACTLY the sketch a one-shot build
+    over the full history would produce: no drift from incremental
+    maintenance, tested against kmv_distinct's n_est.
 
     What the stream cannot give back is n_exact for groups past k —
     that is the point of a sketch (the batch operator keeps n_exact
     only to MEASURE error). Estimates follow the same rule: fewer than
     k merged hashes = exact count, else (k-1)*2^60/h_(k).
-
-    Replay contract: dynamic partition overwrite keyed by batch id —
-    reprocessing rewrites the batch's own partition (tested).
     """
 
     def __init__(
@@ -937,69 +857,30 @@ class KmvIngestForeachBatch:
         self.k = k
         self.batches_seen: list[int] = []
 
-    def _hashed(self, df: DataFrame) -> DataFrame:
-        return df.select(
-            F.col(self.group_col).alias("__g"),
-            F.conv(
-                F.substring(
-                    F.md5(F.col(self.value_col).cast("string")), 1, 15
-                ),
-                16,
-                10,
-            )
-            .cast("bigint")
-            .alias("__h"),
-        ).distinct()
-
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql import Window
+
+        from sheetsetl_spark.operators.profiling import _kmv_hashes
 
         self.batches_seen.append(batch_id)
         w = Window.partitionBy("__g").orderBy("__h")
         kmin = (
-            self._hashed(batch_df)
+            _kmv_hashes(batch_df, self.group_col, self.value_col)
             .withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") <= self.k)
             .select("__g", "__h")
         )
-        (
-            kmin.withColumn("__batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch_id")
-            .parquet(self.store_dir)
-        )
+        _write_batch(kmin, batch_id, self.store_dir)
 
     def estimates(self, spark: SparkSession) -> DataFrame:
         """(group, n_est) from the merged store — identical to the
         batch operator's n_est over the full ingested history."""
-        from pyspark.sql import Window
+        from sheetsetl_spark.operators.profiling import _kmv_estimates
 
-        merged = (
-            spark.read.parquet(self.store_dir).select("__g", "__h").distinct()
-        )
-        w = Window.partitionBy("__g").orderBy("__h")
-        per = (
-            merged.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= self.k)
-            .groupBy("__g")
-            .agg(
-                F.count("*").alias("__n_min"),
-                F.max(
-                    F.when(F.col("__rn") == self.k, F.col("__h"))
-                ).alias("__kth"),
-            )
-        )
-        est = F.when(
-            F.col("__kth").isNull(), F.col("__n_min").cast("double")
-        ).otherwise(
-            F.lit(float(self.k - 1))
-            * F.pow(F.lit(2.0), F.lit(60.0))
-            / F.col("__kth")
-        )
-        return per.select(
+        merged = _read_merged(spark, self.store_dir).distinct()
+        return _kmv_estimates(merged, self.k).select(
             F.col("__g").alias(self.group_col),
-            F.round(est, 2).alias("n_est"),
+            F.round("__est", 2).alias("n_est"),
         )
 
 
@@ -1011,14 +892,12 @@ class QuantileSketchIngestForeachBatch:
     stream cannot (edges would drift batch to batch and early cells
     would be binned against stale edges). The production form pins the
     edges up front from the known value domain — then the histogram is
-    a LINEAR sketch like CMS: per-batch (bin, cnt) cells merge by
-    groupBy-sum into EXACTLY the one-shot fixed-edge histogram, and
-    quantile reads use the same interpolation arithmetic
-    (:meth:`oneshot` is that one-shot build; parity tested). Values
-    outside [lo, hi) clamp into the edge bins — the fixed-domain
-    trade-off, stated rather than hidden.
-
-    Replay contract: dynamic partition overwrite keyed by batch id.
+    a LINEAR sketch like CMS: per-batch (bin, cnt) cells in the batch
+    store (:func:`_write_batch`) merge by groupBy-sum into EXACTLY the
+    one-shot fixed-edge histogram, and quantile reads use the same
+    interpolation arithmetic (:meth:`oneshot` is that one-shot build;
+    parity tested). Values outside [lo, hi) clamp into the edge bins —
+    the fixed-domain trade-off, stated rather than hidden.
     """
 
     def __init__(
@@ -1032,6 +911,8 @@ class QuantileSketchIngestForeachBatch:
     ):
         if not hi > lo:
             raise ValueError("QuantileSketch: hi must exceed lo")
+        if bins < 1:
+            raise ValueError("QuantileSketch: bins must be >= 1")
         self.sketch_dir = sketch_dir
         self.lo = lo
         self.hi = hi
@@ -1056,14 +937,7 @@ class QuantileSketchIngestForeachBatch:
         )
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        (
-            self._cells(batch_df)
-            .withColumn("__batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch_id")
-            .parquet(self.sketch_dir)
-        )
+        _write_batch(self._cells(batch_df), batch_id, self.sketch_dir)
         self.batches_seen.append(batch_id)
 
     def _quantiles_from_hist(self, hist: DataFrame) -> DataFrame:
@@ -1114,7 +988,7 @@ class QuantileSketchIngestForeachBatch:
     def quantiles(self, spark: SparkSession) -> DataFrame:
         """(quantile, estimate) from the merged incremental store."""
         hist = (
-            spark.read.parquet(self.sketch_dir)
+            _read_merged(spark, self.sketch_dir)
             .groupBy("bin")
             .agg(F.sum("cnt").alias("cnt"))
         )
@@ -1132,16 +1006,12 @@ class ActiveUserIngestForeachBatch:
 
     The maintained state is the DISTINCT (day, user_id) pair set: each
     micro-batch reduces to its own distinct pairs, anti-joins the
-    accumulated store (excluding its own batch id, the replay rule
-    DedupIngestForeachBatch established), and appends only NEVER-SEEN
-    pairs — per-batch cost is O(batch + matching store keys), nothing
-    rescans raw history. The pair store is the minimal sufficient
-    statistic for any trailing-window distinct-user metric: days x
-    users, orders of magnitude smaller than the event history.
-
-    Replay contract: dynamic partition overwrite keyed by batch id — a
-    replayed batch anti-joins the OTHER batches' pairs, reproduces the
-    same new-pair set, and rewrites its own partition (tested).
+    accumulated batch store (:func:`_write_batch`; the current batch is
+    left out, so a replay reproduces the same new-pair set), and appends
+    only NEVER-SEEN pairs — per-batch cost is O(batch + matching store
+    keys), nothing rescans raw history. The pair store is the minimal
+    sufficient statistic for any trailing-window distinct-user metric:
+    days x users, orders of magnitude smaller than the event history.
 
     Read side: :meth:`wau` runs the same bounded-explode computation as
     the batch query (each active day covers <= 7 window-end days;
@@ -1153,52 +1023,20 @@ class ActiveUserIngestForeachBatch:
         self.window_days = window_days
         self.batches_seen: list[int] = []
 
-    def _store_pairs(self, spark, exclude_batch: int | None = None):
-        import os
-
-        from pyspark.sql import functions as F
-
-        if not (
-            os.path.isdir(self.store_dir)
-            and any(
-                f.endswith(".parquet")
-                for _, _, fs in os.walk(self.store_dir)
-                for f in fs
-            )
-        ):
-            return None
-        df = spark.read.parquet(self.store_dir)
-        if exclude_batch is not None:
-            df = df.filter(F.col("__batch_id") != exclude_batch)
-        return df.select("day", "user_id")
-
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
         self.batches_seen.append(batch_id)
-        spark = batch_df.sparkSession
         pairs = batch_df.select(
             F.to_date("ts").alias("day"), "user_id"
         ).distinct()
-        store = self._store_pairs(spark, exclude_batch=batch_id)
+        store = _read_store(batch_df.sparkSession, self.store_dir, batch_id)
         if store is not None:
             pairs = pairs.join(store, ["day", "user_id"], "left_anti")
-        (
-            pairs.withColumn("__batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch_id")
-            .parquet(self.store_dir)
-        )
+        _write_batch(pairs, batch_id, self.store_dir)
 
     def wau(self, spark) -> DataFrame:
         """(day, wau_7d) for every day in the store's span — identical
         semantics to the x78 batch query over the ingested events."""
-        from pyspark.sql import functions as F
-
-        active = self._store_pairs(spark)
-        if active is None:
-            raise ValueError("empty store: no batches ingested yet")
+        active = _read_merged(spark, self.store_dir)
         bounds = active.agg(F.min("day").alias("lo"), F.max("day").alias("hi"))
         spine = bounds.select(F.explode(F.sequence("lo", "hi")).alias("wday"))
         cover = (
@@ -1242,11 +1080,9 @@ class DecontaminationIngestForeachBatch:
     from a parquet dir — at production scale a maintained table, same
     asymmetry either way.
 
-    Replay safety (foreachBatch may re-run a batch after failure): both
-    sinks partition by __batch_id with dynamic partition overwrite, and
-    the gate is deterministic — a replay rewrites both partitions with
-    identical rows, never double-appends, never flips a doc between
-    corpus and quarantine.
+    Corpus and quarantine are both batch stores (:func:`_write_batch`)
+    and the gate is deterministic, so a replay never flips a doc
+    between them.
     """
 
     def __init__(
@@ -1267,8 +1103,6 @@ class DecontaminationIngestForeachBatch:
         self.batches_seen: list[int] = []
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
         from sheetsetl_spark.operators.dedup import (
             _agg_probe_hits,
             substring_decontaminate,
@@ -1310,14 +1144,8 @@ class DecontaminationIngestForeachBatch:
         clean = batch_df.join(
             hits.select(self.id_col), self.id_col, "left_anti"
         )
-        for frame, out_dir in ((clean, self.corpus_dir), (quarantined, self.quarantine_dir)):
-            (
-                frame.withColumn("__batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("__batch_id")
-                .parquet(out_dir)
-            )
+        _write_batch(clean, batch_id, self.corpus_dir)
+        _write_batch(quarantined, batch_id, self.quarantine_dir)
 
 
 class HoltIngestForeachBatch:
@@ -1326,17 +1154,14 @@ class HoltIngestForeachBatch:
     operators/incremental.py::holt_by_key (c100's batch query).
 
     Merge property: the daily frame is a LINEAR aggregate (per-(key,
-    day) DECIMAL sums), so summing each micro-batch's partials is
-    EXACTLY the daily series a one-shot aggregation over the full
-    history would produce — decimal addition is associative and
-    order-free. The sequential Holt fold then runs over that identical
-    bounded series, so the streaming estimate equals the batch
+    day) DECIMAL sums), so summing each micro-batch's partials in the
+    batch store (:func:`_write_batch`) is EXACTLY the daily series a
+    one-shot aggregation over the full history would produce — decimal
+    addition is associative and order-free — and a replayed batch is
+    not double-counted. The sequential Holt fold then runs over that
+    identical bounded series, so the streaming estimate equals the batch
     operator's bit-for-bit (tested). Per-batch cost is one scan of the
     batch plus a (keys x days-touched) write; nothing rescans history.
-
-    Replay contract: dynamic partition overwrite keyed by batch id —
-    reprocessing a batch rewrites its own partial partition instead of
-    double-counting (tested).
     """
 
     def __init__(
@@ -1360,13 +1185,7 @@ class HoltIngestForeachBatch:
         ).agg(
             F.sum(F.col(self.value_col).cast("decimal(18,6)")).alias("__part")
         )
-        (
-            daily.withColumn("__batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch_id")
-            .parquet(self.store_dir)
-        )
+        _write_batch(daily, batch_id, self.store_dir)
 
     def smoothed(self, spark: SparkSession) -> DataFrame:
         """(key, n_points, level, trend, forecast_7) over the merged
@@ -1375,7 +1194,7 @@ class HoltIngestForeachBatch:
         from sheetsetl_spark.operators.incremental import holt_by_key
 
         merged = (
-            spark.read.parquet(self.store_dir)
+            _read_merged(spark, self.store_dir)
             .groupBy("__k", "__day")
             .agg(F.sum("__part").cast("double").alias("__x"))
         )

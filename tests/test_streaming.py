@@ -638,6 +638,116 @@ def test_embedding_dedup_ingest_empty_first_batch(spark, tmp_path):
     assert {r["vec_id"] for r in spark.read.parquet(idx).collect()} == {9}
 
 
+def _batch_store_case(spark, name, root):
+    """(ingest, batch, store dirs) for one batch-store ingest writing
+    under ``root``; ``batch`` is a small real micro-batch."""
+    from pyspark.sql import functions as F
+
+    from sheetsetl_spark.operators import multimodal as mm
+    from sheetsetl_spark.operators.similarity import write_ivf_index
+    from sheetsetl_spark import streaming as st
+
+    docs = spark.createDataFrame(
+        [
+            (1, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
+            (2, "alpha beta gamma delta epsilon zeta eta theta iota kappa extra"),
+            (3, "one two three four five six seven eight nine ten"),
+        ],
+        "doc_id long, text string",
+    )
+    if name == "dedup":
+        return st.DedupIngestForeachBatch(f"{root}/h"), docs, ["h"]
+    if name == "media":
+        def img(mid, seed):
+            rgb = bytes((j * seed + 11) % 256 for j in range(60))
+            return (mid, "image", mm.encode_ppm(5, 4, rgb), None)
+
+        media = spark.createDataFrame(
+            [img(1, 37), img(2, 37), img(5, 97)], schema=mm.MEDIA_SCHEMA
+        )
+        ingest = st.MediaDedupIngestForeachBatch(f"{root}/h", f"{root}/i")
+        return ingest, media, ["h", "i"]
+    if name == "active_user":
+        events = spark.createDataFrame(
+            [(1, "2024-01-01 10:00:00"), (1, "2024-01-01 11:00:00"),
+             (2, "2024-01-03 09:00:00")],
+            "user_id long, ts string",
+        ).withColumn("ts", F.to_timestamp("ts"))
+        return st.ActiveUserIngestForeachBatch(f"{root}/s"), events, ["s"]
+    if name == "decontamination":
+        spark.createDataFrame(
+            [(7, "gamma delta epsilon zeta")], "probe_id long, probe string"
+        ).write.parquet(f"{root}/probes")
+        gate = st.DecontaminationIngestForeachBatch(f"{root}/probes", f"{root}/c", f"{root}/q")
+        return gate, docs, ["c", "q"]
+    if name == "sketch":
+        return st.SketchIngestForeachBatch(f"{root}/s", width=64), docs, ["s"]
+    if name == "kmv":
+        return st.KmvIngestForeachBatch(f"{root}/s", "doc_id", "text", k=2), docs, ["s"]
+    if name == "quantile":
+        values = spark.createDataFrame([(float(i),) for i in range(20)], "value double")
+        return st.QuantileSketchIngestForeachBatch(f"{root}/s", 0.0, 20.0, bins=4), values, ["s"]
+    if name == "holt":
+        series = spark.createDataFrame(
+            [("A", "2024-01-01", 4.0), ("A", "2024-01-02", 3.0)],
+            "k string, d string, x double",
+        )
+        return st.HoltIngestForeachBatch(f"{root}/s", "k", "d", "x"), series, ["s"]
+    assert name == "ivf", name
+    emb = load_table(spark, SF_SMALL, "embeddings")
+    write_ivf_index(emb.filter("vec_id < 40"), f"{root}/ivf", num_centroids=8)
+    vectors = emb.filter("vec_id >= 40 AND vec_id < 50")
+    return st.IvfIndexIngestForeachBatch(f"{root}/ivf"), vectors, ["ivf"]
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["dedup", "media", "active_user", "decontamination", "sketch", "kmv",
+     "quantile", "holt", "ivf"],
+)
+def test_batch_store_ingest_empty_first_batch(spark, tmp_path, name):
+    """An empty micro-batch 0 writes no partition: after it, a real
+    batch 1 and a replay of batch 1 leave every store exactly as a run
+    that only ingested batch 1."""
+    def stores(root, dirs):
+        return [sorted(map(str, spark.read.parquet(f"{root}/{d}").collect())) for d in dirs]
+
+    ingest, batch, dirs = _batch_store_case(spark, name, tmp_path / "with_empty")
+    ingest(batch.limit(0), 0)
+    ingest(batch, 1)
+    ingest(batch, 1)
+    want_ingest, want_batch, _ = _batch_store_case(spark, name, tmp_path / "plain")
+    want_ingest(want_batch, 1)
+    got = stores(tmp_path / "with_empty", dirs)
+    assert got == stores(tmp_path / "plain", dirs)
+    assert all(got)
+
+
+@pytest.mark.parametrize("written", ["never", "empty_batch"])
+@pytest.mark.parametrize(
+    "name, read",
+    [
+        ("sketch", lambda ingest, spark: ingest.merged_sketch(spark)),
+        ("sketch", lambda ingest, spark: ingest.estimates(spark, ["alpha"])),
+        ("kmv", lambda ingest, spark: ingest.estimates(spark)),
+        ("quantile", lambda ingest, spark: ingest.quantiles(spark)),
+        ("holt", lambda ingest, spark: ingest.smoothed(spark)),
+        ("active_user", lambda ingest, spark: ingest.wau(spark)),
+    ],
+    ids=["sketch.merged_sketch", "sketch.estimates", "kmv.estimates",
+         "quantile.quantiles", "holt.smoothed", "active_user.wau"],
+)
+def test_batch_store_read_side_on_empty_store(spark, tmp_path, name, read, written):
+    """A read side over a store holding no data — nothing ingested yet,
+    or only an empty micro-batch — raises the one empty-store
+    ValueError instead of a Spark path or schema-inference error."""
+    ingest, batch, _ = _batch_store_case(spark, name, tmp_path)
+    if written == "empty_batch":
+        ingest(batch.limit(0), 0)
+    with pytest.raises(ValueError, match="empty store"):
+        read(ingest, spark)
+
+
 def test_media_dedup_ingest_maintains_fingerprint_index(spark, tmp_path):
     """Binary-payload member of the incremental-dedup family: image
     batches dedupe against the stored dHash index (payloads never enter
@@ -881,7 +991,8 @@ def test_kmv_ingest_matches_oneshot_sketch(spark, tmp_path):
     sets merge into EXACTLY the one-shot sketch — n_est over the
     ingested history equals operators/profiling.py::kmv_distinct on the
     same rows, for both the exact-fallback (< k) and estimator (>= k)
-    branches — and a replayed batch changes nothing."""
+    branches — and a replayed batch changes nothing. k < 2 is a
+    ValueError on both sides (k = 1 would estimate 0 for every group)."""
     from sheetsetl_spark.operators.profiling import kmv_distinct
     from sheetsetl_spark.streaming import KmvIngestForeachBatch
 
@@ -906,13 +1017,26 @@ def test_kmv_ingest_matches_oneshot_sketch(spark, tmp_path):
     assert got == want
     assert got["small"] == 3.0  # exact-fallback branch really exercised
 
+    one = KmvIngestForeachBatch(str(tmp_path / "kmv1"), "g", "v", k=1)
+    one(b1, 0)
+    with pytest.raises(ValueError, match="k >= 2"):
+        one.estimates(spark)
+    with pytest.raises(ValueError, match="k >= 2"):
+        kmv_distinct(b1, "g", "v", k=1)
+
 
 def test_quantile_sketch_ingest_matches_oneshot(spark, tmp_path):
     """Streaming fixed-edge histogram quantiles: merged per-batch cells
     equal the one-shot build bit-for-bit (linear-sketch property), and
-    a replayed batch does not double-count."""
+    a replayed batch does not double-count. A degenerate domain or bin
+    count is a ValueError at construction, not at the first batch."""
     from sheetsetl_spark.streaming import QuantileSketchIngestForeachBatch
 
+    for lo, hi, bins in ((0.0, 1000.0, 0), (5.0, 5.0, 50)):
+        with pytest.raises(ValueError, match="QuantileSketch"):
+            QuantileSketchIngestForeachBatch(
+                str(tmp_path / "bad"), lo=lo, hi=hi, bins=bins
+            )
     b1 = spark.createDataFrame([(float(i),) for i in range(0, 500)], "value double")
     b2 = spark.createDataFrame(
         [(float(i),) for i in range(300, 1000)] + [(-50.0,), (2000.0,)],  # clamped
