@@ -10,6 +10,7 @@ only O(candidate) stage and AQE's skew-join splits hot buckets.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Window
@@ -272,8 +273,8 @@ def minhash_signatures(
     ``with_arr_col``: additionally emit ``sh_arr`` (the sorted
     distinct-shingle array) from the same groupBy — lets a
     candidate-verify stage intersect per-doc arrays (array_intersect on
-    |cand| rows) instead of re-aggregating the stream and running the
-    O(|cand| x doc_len) exploded join (r11; the c72/c82 verify shape)."""
+    |cand| rows) without re-aggregating the stream or exploding
+    |cand| x doc_len rows."""
     base = shingle_df
     if base is None:
         base = shingles(docs, n=n, id_col=id_col, text_col=text_col, max_df=max_shingle_df)
@@ -320,59 +321,68 @@ def _band_keys(bands: int, rows_per_band: int, hash_family: str = "xxhash64") ->
     return [key(b).alias(f"band_{b}") for b in range(bands)]
 
 
-def minhash_lsh_pairs(
+def _minhash_band_candidates(
     docs: DataFrame,
-    threshold: float,
-    num_hashes: int = 32,
-    bands: int = 8,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_shingle_df: int | None = 1000,
-    max_bucket_size: int | None = 1000,
-    hash_family: str = "xxhash64",
-) -> DataFrame:
-    """C2: MinHash + LSH banding near-dup candidates, verified by true
-    Jaccard >= threshold.
+    num_hashes: int,
+    bands: int,
+    n: int,
+    id_col: str,
+    text_col: str,
+    max_shingle_df: int | None,
+    max_bucket_size: int | None,
+    hash_family: str,
+) -> tuple[DataFrame, DataFrame]:
+    """MinHash + LSH banding candidate pairs, shared by
+    :func:`minhash_lsh_pairs` and :func:`minhash_estimate_audit`.
 
-    rows_per_band = num_hashes / bands; docs agreeing on any full band
-    collide into a bucket; candidates come from the bucket equi-join.
-    This is the 100 TB path: signature table is O(docs), band join touches
-    only colliding docs. Verification reuses the exact Jaccard operator on
-    the candidate subset.
+    BANDING: the ``num_hashes`` signature components split into
+    ``bands`` bands of r = num_hashes / bands rows (``bands`` >= 1 must
+    divide ``num_hashes``, else ``ValueError``). Two documents are a
+    candidate when they agree on every row of at least one band — a
+    pair at Jaccard j collides with probability 1 - (1 - j^r)^bands.
+    Candidates come from the (band_idx, band key) equi-join, so the
+    signature table is O(docs) and the band join touches only colliding
+    documents; there is no all-pairs stage.
 
-    Two scale guards: ``max_shingle_df`` caps boilerplate shingles in
-    BOTH the signature and verification streams (same capped universe as
-    :func:`ngram_jaccard_pairs`, so LSH output still equals the exact
-    operator's wherever banding recall is 1); ``max_bucket_size`` drops
-    degenerate band buckets (a bucket of m near-identical templated docs
-    contributes m² candidates — at corpus scale a boilerplate-heavy
-    source can put millions of docs in one bucket). The bucket cap is a
-    recall guard only: it binds on pathological buckets far above any
-    honest near-dup cluster size.
+    CAPS: ``max_shingle_df`` drops boilerplate shingles (document
+    frequency above the cap) before the signatures AND the shingle
+    arrays are built, so a verify over ``sh_arr`` scores the same capped
+    universe as :func:`ngram_jaccard_pairs` and equals it wherever
+    banding recall is 1. ``max_bucket_size`` (None = no cap) drops band
+    buckets with more members: a bucket of m near-identical templated
+    documents contributes m² candidates, and at corpus scale a
+    boilerplate-heavy source can put millions of documents in one
+    bucket. It is a recall guard that binds only on pathological
+    buckets far above any honest near-dup cluster size.
 
-    The shingle stream feeds the hot-shingle aggregate and the signature
-    groupBy, so the RAW stream is persisted (memory, spill to disk) and
-    the df-cap is an anti-join applied over cache reads — without this
-    the lineage would re-shingle the corpus per consumer. Spark's cache
-    manager keys on the canonicalized plan, so repeated calls over the
-    same input reuse one cache entry. Verification (r11) intersects
-    per-doc sorted shingle ARRAYS collected in the SAME groupBy as the
-    signatures (``with_arr_col``), so the old second aggregation over
-    the stream and the O(|cand| x doc_len) exploded verify join are
-    gone — the signature frame (now the only multi-consumer) is
-    persisted instead and candidates fetch two arrays each."""
-    if num_hashes % bands:
-        raise ValueError(f"num_hashes={num_hashes} not divisible by bands={bands}")
+    Returns ``(sig, candidates)``. sig = (``id_col``, mh_0..mh_{k-1},
+    n_sh, sh_arr), one row per document with at least one capped
+    shingle; sh_arr is its sorted distinct capped shingles and n_sh
+    their count. candidates = distinct (doc_a, doc_b, n_a, n_b) with
+    doc_a < doc_b; the Jaccard denominators come from the signature
+    groupBy and ride along the band join, so no size join follows.
+
+    Persistence: the raw shingle stream feeds the hot-shingle aggregate
+    and the signature groupBy, so it is persisted and the df cap is a
+    broadcast anti-join over cache reads — one corpus shingling. The
+    signature frame feeds the band stack, the bucket cap's hot list and
+    the callers' verify, so it is persisted too. Spark's cache manager
+    keys on the canonicalized plan, so repeated calls over the same
+    input reuse the entries. The returned frames stay lazy, so the
+    entries cannot be unpersisted here: wrap call and consumption in
+    ``sheetsetl_spark.cache.cache_scope()`` to bound their lifetime."""
+    if bands < 1 or num_hashes < 1 or num_hashes % bands:
+        raise ValueError(
+            f"bands must be >= 1 and divide num_hashes >= 1, "
+            f"got num_hashes={num_hashes}, bands={bands}"
+        )
     rows_per_band = num_hashes // bands
-    # spread_key examined and NOT used here (r12): the signature
-    # groupBy consumes the stream through the persist below, and a
-    # lazily-persisted plan is an unfinalized AdaptiveSparkPlan whose
-    # output partitioning reads as Unknown at consumer-planning time —
-    # the groupBy re-shuffles regardless, so a keyed spread would only
-    # ADD a document exchange (measured neutral-to-noise at sf0.1; the
-    # direct-lineage callers edit_distance_pairs /
-    # prefix_filter_jaccard_pairs DO elide and use it).
+    # No spread_key: the signature groupBy consumes the stream through
+    # the persist below, and a lazily-persisted plan is an unfinalized
+    # AdaptiveSparkPlan whose output partitioning reads as Unknown at
+    # consumer-planning time — the groupBy re-shuffles regardless, so a
+    # keyed spread would only ADD a document exchange (measured
+    # neutral-to-noise at sf0.1).
     raw = scoped_persist(shingles(docs, n=n, id_col=id_col, text_col=text_col))
     sh = _drop_hot_keys(raw, ["shingle"], max_shingle_df) if max_shingle_df else raw
     sig = scoped_persist(
@@ -398,40 +408,57 @@ def minhash_lsh_pairs(
         ),
     )
     if max_bucket_size is not None:
-        # The bucket-cap's hot-list subquery and both join sides read
-        # stacked = a posexplode over the PERSISTED signature frame
-        # (r11: sig, not the band table, is the multi-consumer persist —
-        # it also feeds the verify arrays), so counting bucket sizes is
-        # a cache read plus a trivial explode, never a re-aggregation.
-        # Lifecycle: the returned pair DF stays lazy, so this operator
-        # cannot unpersist safely itself — wrap call + consumption in
-        # ``sheetsetl_spark.cache.cache_scope()`` to bound the entries'
-        # lifetime (outside a scope they live until cleared, deduped by
-        # Spark's plan-keyed cache manager).
         stacked = _drop_hot_keys(stacked, ["band_idx", "band_hash"], max_bucket_size)
-    left = stacked.select(
-        F.col(id_col).alias("doc_a"), F.col("n_sh").alias("n_a"), "band_idx", "band_hash"
+    left, right = (
+        stacked.select(
+            F.col(id_col).alias(f"doc_{s}"),
+            F.col("n_sh").alias(f"n_{s}"),
+            "band_idx",
+            "band_hash",
+        )
+        for s in "ab"
     )
-    right = stacked.select(
-        F.col(id_col).alias("doc_b"), F.col("n_sh").alias("n_b"), "band_idx", "band_hash"
-    )
-    # n_a/n_b (the Jaccard denominators) ride along with the band join —
-    # they came for free from the signature groupBy, so no separate size
-    # aggregate and no size join afterwards.
     candidates = (
         left.join(right, ["band_idx", "band_hash"])
         .filter(F.col("doc_a") < F.col("doc_b"))
         .select("doc_a", "doc_b", "n_a", "n_b")
         .distinct()
     )
-    # Candidate-proportional verification: intersection sizes are computed
-    # ONLY for LSH candidates (never all-pairs — that would undo the whole
-    # point of banding at scale). The per-doc sorted shingle arrays come
-    # from the SAME capped stream and the SAME groupBy as the signatures
-    # (with_arr_col), so the verified Jaccard matches the exact
-    # operator's, the corpus is not re-scanned, and each candidate pair
-    # fetches two arrays instead of exploding |cand| x doc_len rows
-    # through a pair-keyed shuffle (the c72/c82 verify shape; r11).
+    return sig, candidates
+
+
+def minhash_lsh_pairs(
+    docs: DataFrame,
+    threshold: float,
+    num_hashes: int = 32,
+    bands: int = 8,
+    n: int = 3,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    max_shingle_df: int | None = 1000,
+    max_bucket_size: int | None = 1000,
+    hash_family: str = "xxhash64",
+) -> DataFrame:
+    """C2: MinHash + LSH banding near-dup candidates, verified by true
+    Jaccard >= threshold. Output: (doc_a, doc_b, jaccard) with
+    doc_a < doc_b, jaccard rounded 6 dp.
+
+    This is the 100 TB path. Candidates, the banding contract
+    (``bands`` must divide ``num_hashes``) and both caps
+    (``max_shingle_df``, ``max_bucket_size``) are those of
+    :func:`_minhash_band_candidates`. With the shingle cap the output
+    equals :func:`ngram_jaccard_pairs` wherever banding recall is 1.
+
+    Verification is candidate-proportional: intersection sizes are
+    computed ONLY for LSH candidates, never all pairs. Each candidate
+    fetches its two sorted shingle arrays from the persisted signature
+    frame and intersects them JVM-side, so the corpus is not re-scanned
+    and no |cand| x doc_len rows are exploded through a pair-keyed
+    shuffle."""
+    sig, candidates = _minhash_band_candidates(
+        docs, num_hashes, bands, n, id_col, text_col,
+        max_shingle_df, max_bucket_size, hash_family,
+    )
     a = sig.select(F.col(id_col).alias("doc_a"), F.col("sh_arr").alias("sa"))
     b = sig.select(F.col(id_col).alias("doc_b"), F.col("sh_arr").alias("sb"))
     inter_col = F.size(F.array_intersect(F.col("sa"), F.col("sb"))).cast("long")
@@ -463,7 +490,7 @@ def minhash_estimate_audit(
     """Estimator-accuracy audit for the MinHash family: for every LSH
     candidate pair whose EXACT Jaccard reaches ``threshold``, emit the
     signature-agreement ESTIMATE next to the exact value —
-    (doc_a, doc_b, jaccard, est_jaccard, abs_err).
+    (doc_a, doc_b, jaccard, est_jaccard, abs_err), all rounded 6 dp.
 
     The production dedup path (minhash_lsh_pairs) verifies candidates
     with exact Jaccard precisely because the k-component estimate has
@@ -474,80 +501,41 @@ def minhash_estimate_audit(
     against exact Jaccard on the (candidate-proportional) verified
     subset, never corpus-wide.
 
-    md5-portable family only (the audit path must be engine-portable so
-    a DuckDB twin rebuilds signatures bit-for-bit). One signature
-    aggregation feeds banding AND both agreement sides (persisted);
-    verification reuses the same capped shingle stream — the corpus is
-    scanned once for shingles, once for signatures."""
-    if num_hashes % bands:
-        raise ValueError(f"num_hashes={num_hashes} not divisible by bands={bands}")
-    rpb = num_hashes // bands
-    # spread_key not used: persisted-stream consumer, see
-    # minhash_lsh_pairs.
-    raw = scoped_persist(shingles(docs, n=n, id_col=id_col, text_col=text_col))
-    sh = _drop_hot_keys(raw, ["shingle"], max_shingle_df) if max_shingle_df else raw
-    sig = scoped_persist(
-        minhash_signatures(
-            docs,
-            num_hashes=num_hashes,
-            n=n,
-            id_col=id_col,
-            text_col=text_col,
-            max_shingle_df=max_shingle_df,
-            hash_family="md5",
-            shingle_df=sh,
-            with_size_col=True,
-        )
+    Candidates come from :func:`_minhash_band_candidates` with the
+    md5-portable family (the audit path must be engine-portable so a
+    DuckDB twin rebuilds signatures bit-for-bit) and no bucket cap. Each
+    candidate fetches its two signatures and sorted shingle arrays from
+    the one persisted signature frame: the estimate compares the
+    signatures, the exact Jaccard intersects the arrays, as in
+    :func:`minhash_lsh_pairs`."""
+    sig, candidates = _minhash_band_candidates(
+        docs, num_hashes, bands, n, id_col, text_col, max_shingle_df, None, "md5"
     )
-    stacked = sig.select(
-        F.col(id_col),
-        F.posexplode(F.array(*_band_keys(bands, rpb, "md5"))).alias(
-            "band_idx", "band_hash"
-        ),
-    )
-    candidates = (
-        stacked.select(F.col(id_col).alias("doc_a"), "band_idx", "band_hash")
-        .join(
-            stacked.select(F.col(id_col).alias("doc_b"), "band_idx", "band_hash"),
-            ["band_idx", "band_hash"],
+    a_sig, b_sig = (
+        sig.select(
+            F.col(id_col).alias(f"doc_{s}"),
+            F.col("sh_arr").alias(f"s{s}"),
+            *[F.col(f"mh_{i}").alias(f"{s}_{i}") for i in range(num_hashes)],
         )
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
+        for s in "ab"
     )
     agree = sum(
         F.when(F.col(f"a_{i}") == F.col(f"b_{i}"), 1).otherwise(0)
         for i in range(num_hashes)
     )
-    a_sig = sig.select(
-        F.col(id_col).alias("doc_a"),
-        F.col("n_sh").alias("n_a"),
-        *[F.col(f"mh_{i}").alias(f"a_{i}") for i in range(num_hashes)],
-    )
-    b_sig = sig.select(
-        F.col(id_col).alias("doc_b"),
-        F.col("n_sh").alias("n_b"),
-        *[F.col(f"mh_{i}").alias(f"b_{i}") for i in range(num_hashes)],
-    )
-    withest = (
+    inter_col = F.size(F.array_intersect(F.col("sa"), F.col("sb"))).cast("long")
+    scored = (
         candidates.join(a_sig, "doc_a")
         .join(b_sig, "doc_b")
         .select(
             "doc_a", "doc_b", "n_a", "n_b",
+            inter_col.alias("inter"),
             (agree.cast("double") / F.lit(float(num_hashes))).alias("__est"),
         )
     )
-    a = sh.select(F.col(id_col).alias("doc_a"), "shingle")
-    b = sh.select(F.col(id_col).alias("doc_b"), "shingle")
-    inter = (
-        withest.join(a, "doc_a")
-        .join(b, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b", "n_a", "n_b", "__est")
-        .agg(F.count("*").alias("inter"))
-    )
     j_raw = F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter"))
     return (
-        inter.select(
+        scored.select(
             "doc_a",
             "doc_b",
             round6_bin(j_raw).alias("jaccard"),
@@ -1302,9 +1290,9 @@ def incremental_neardup_filter(
     # One persisted raw shingle stream per side: banding signatures AND
     # verification read the cache; the df-cap is a broadcast anti-join
     # over cache reads (single scan of each side, same policy as
-    # minhash_lsh_pairs).
+    # _minhash_band_candidates).
     # spread_key not used: both sides persist below, see
-    # minhash_lsh_pairs (an unfinalized cached plan's partitioning
+    # _minhash_band_candidates (an unfinalized cached plan's partitioning
     # reads as Unknown, so the signature groupBys re-shuffle anyway).
     raw_new = shingles(new_docs, n=n, id_col=id_col, text_col=text_col)
     raw_old = shingles(corpus, n=n, id_col=id_col, text_col=text_col)
@@ -1577,6 +1565,125 @@ def duplicated_passages(
     )
 
 
+def _rarity_prefix_candidates(
+    stream: DataFrame,
+    id_col: str,
+    tok_col: str,
+    prefix_len: Column,
+    bound: Callable[[Column, Column, Column], Column],
+    carry: tuple[str, ...] = (),
+    pair_filter: Column | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """Candidate pairs of an exact set-similarity self-join by rarity
+    prefix filtering (the AllPairs/PPJoin family — Chaudhuri et al.
+    ICDE'06, Xiao et al. WWW'08; public algorithms), shared by
+    :func:`prefix_filter_jaccard_pairs` and :func:`edit_distance_pairs`.
+
+    ``stream`` holds one row per (document ``id_col``, token
+    ``tok_col``), tokens unique per document; ``carry`` names columns
+    constant per document that ride along to ``pair_filter``.
+
+    PREFIX THEOREM: order every document's tokens by the global
+    (df, token) order, rarest first, and call its first p tokens its
+    PREFIX. Two documents that share no prefix token have their whole
+    overlap inside one document's suffix, so overlap <= |d| - p. A
+    caller whose similarity predicate needs overlap > |d| - p of every
+    qualifying pair therefore finds each such pair in the equi-join of
+    the PREFIX streams alone — each document's rarest tokens, a small
+    fanout even when a boilerplate token sits in f documents (it is
+    almost never among a document's rarest). ``prefix_len`` is that p,
+    a Column over ``__n`` (the document's token count).
+
+    PPJOIN POSITIONAL BOUND: both token lists sort by the same global
+    order, so every common token ordered before the pair's last shared
+    prefix token lies inside both prefixes and is already counted in s,
+    the number of shared prefix tokens:
+        overlap <= s + min(n_a - max_ia, n_b - max_ib)
+    (max_ia/max_ib: the 1-based ranks of the last shared prefix token).
+    ``bound(ub, n_a, n_b)`` gets that upper bound and both token counts
+    and keeps the pairs that can still qualify. It runs on the
+    (doc_a, doc_b) aggregation, before anything heavy attaches.
+    ``pair_filter`` runs on the joined prefix rows next to
+    doc_a < doc_b; a carried column c appears there as ``c_a``/``c_b``.
+
+    Returns ``(cand, arrays)``: cand = (doc_a, doc_b) with
+    doc_a < doc_b; arrays = (__id, __toks, __n), each document's token
+    array for the caller's verify step, in (df, token) order
+    (array_intersect does not depend on order). A verify that fetches
+    two arrays per surviving pair and intersects them JVM-side is
+    candidate-proportional; the O(|cand| x doc_len) row expansion it
+    replaces spilled >80 GB on a dense-df 10x fixture (SCALE.md
+    round-7). The arrays hold the token strings themselves: dense
+    integer ids would narrow them but cost an id assignment of four
+    exchanges and a checkpoint per call, which measured slower at sf0.1
+    — a trade to revisit for a corpus with very long tokens.
+
+    Shape: df is a groupBy on the token, which collapses map-side to
+    per-partition distinct tokens before its exchange, broadcast-joined
+    back onto the stream; a count window over the token key would push
+    the whole stream through an exchange + sort instead. The (df, token)
+    pairs then fold into ONE sorted array per document whose position is
+    the rarity rank. That per-document frame — corpus rows, not stream
+    rows — is the only multi-consumer and the only thing persisted. The
+    df table broadcasts, so the token vocabulary must fit a build side:
+    character q-grams are bounded by |alphabet|^q times the occurrence
+    tail (KBs at fixture scale), word shingles grow with the corpus.
+    Callers hash-spread the document rows by id before the token
+    explode, so the fold's groupBy needs no exchange of the stream."""
+    tok_df = stream.groupBy(tok_col).agg(F.count("*").alias("df"))
+    docarr = scoped_persist(
+        stream.join(F.broadcast(tok_df), tok_col)
+        .groupBy(F.col(id_col).alias("__id"), *carry)
+        .agg(
+            F.sort_array(
+                F.collect_list(F.struct(F.col("df"), F.col(tok_col)))
+            ).alias("__arr")
+        )
+        .select("__id", *carry, "__arr", F.size("__arr").alias("__n"))
+    )
+    prefix = docarr.select(
+        "__id",
+        *carry,
+        "__n",
+        F.posexplode(F.slice("__arr", F.lit(1), prefix_len)).alias("pos", "__pt"),
+    )
+    a, b = (
+        prefix.select(
+            F.col("__id").alias(f"doc_{s}"),
+            F.col(f"__pt.{tok_col}").alias(tok_col),
+            (F.col("pos") + 1).alias(f"__i{s}"),
+            F.col("__n").alias(f"__n{s}"),
+            *[F.col(c).alias(f"{c}_{s}") for c in carry],
+        )
+        for s in "ab"
+    )
+    pairs = F.col("doc_a") < F.col("doc_b")
+    if pair_filter is not None:
+        pairs = pairs & pair_filter
+    na, nb = F.col("__bna"), F.col("__bnb")
+    upper = F.col("__s") + F.least(na - F.col("__mi"), nb - F.col("__mj"))
+    cand = (
+        a.join(b, tok_col)
+        .filter(pairs)
+        .groupBy("doc_a", "doc_b")
+        .agg(
+            F.count("*").alias("__s"),
+            F.max("__ia").alias("__mi"),
+            F.max("__ib").alias("__mj"),
+            F.max("__na").alias("__bna"),
+            F.max("__nb").alias("__bnb"),
+        )
+        .filter(bound(upper, na, nb))
+        .select("doc_a", "doc_b")
+    )
+    arrays = docarr.select(
+        "__id",
+        F.expr(f"transform(__arr, x -> x.{tok_col})").alias("__toks"),
+        "__n",
+    )
+    return cand, arrays
+
+
 def prefix_filter_jaccard_pairs(
     docs: DataFrame,
     threshold: float,
@@ -1584,177 +1691,68 @@ def prefix_filter_jaccard_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """EXACT set-similarity self-join via prefix filtering (the
-    PPJoin/AllPairs family — Chaudhuri et al. ICDE'06, Xiao et al.
-    WWW'08; public algorithms): all document pairs with shingle-set
-    Jaccard >= ``threshold``, with NO df cap and NO approximation.
+    """EXACT set-similarity self-join: all document pairs with word
+    n-gram shingle-set Jaccard >= ``threshold`` (0 < threshold <= 1),
+    with NO df cap and NO approximation. Documents shorter than ``n``
+    words have no shingles and never pair.
 
-    Contrast the two existing near-dup paths: ngram_jaccard_pairs is
-    exact over a CAPPED shingle universe (boilerplate shingles dropped),
-    minhash_lsh_pairs is probabilistic. Prefix filtering gets exactness
-    AND a sub-quadratic candidate set from a theorem instead of a cap:
-    order every document's shingles by the global (df, shingle) order
-    (rarest first) and call its first |d| - ceil(t*|d|) + 1 shingles the
-    PREFIX; any pair with J >= t must share a prefix shingle (if the
-    rarest intersection shingle of A∩B sat outside A's prefix, the whole
-    intersection would fit in A's suffix of size ceil(t|A|)-1 < t|A| <=
-    |A∩B| — contradiction, and symmetrically for B). So the equi-join
-    runs over PREFIX streams only — rare shingles by construction, tiny
-    fanout — and candidates are verified with a candidate-proportional
-    intersection count, never the full quadratic join. The DuckDB twin
-    is the UNCAPPED brute-force join, so a hash match at fixture scale
-    certifies the filter's completeness, not just its own construction.
+    Contrast the two other near-dup paths: ngram_jaccard_pairs is exact
+    over a CAPPED shingle universe (boilerplate shingles dropped),
+    minhash_lsh_pairs is probabilistic. Here exactness and a
+    sub-quadratic candidate set come from the prefix theorem of
+    :func:`_rarity_prefix_candidates`: J >= t implies
+    |A∩B| >= t|A|, which exceeds the suffix |A| - p for
+    p = |A| - ceil(t|A|) + 1, so every qualifying pair shares a prefix
+    shingle. The positional bound then prunes candidates whose overlap
+    cannot reach t/(1+t)*(n_a+n_b), and the survivors are verified by
+    an exact array intersection. The DuckDB twin is the UNCAPPED
+    brute-force join, so a hash match at fixture scale certifies the
+    filter's completeness, not just its own construction.
 
-    Scale: one corpus scan per branch (the df aggregate re-derives the
-    map-only shingle stream), a map-side-collapsing df groupBy
-    broadcast-joined onto the stream (r12 — this replaced the r11 df
-    COUNT WINDOW, a full shingle-stream exchange + sort; r11 itself had
-    replaced a df groupBy + distributed-prefix-sum dense-id assignment
-    + attach join: the dense ids existed only to narrow the verify
-    arrays, but intersecting the shingle strings directly is
-    candidate-proportional anyway and dropping the id machinery saved
-    four exchanges and a checkpoint per call; the heavier string
-    elements are a conscious trade, revisit if a corpus with very long
-    shingles shows up), then
-    ONE per-doc groupBy collapsing each doc's (df, shingle) pairs into
-    a sorted array whose POSITION is the global-rarity rank (r11, the
-    c82 shape — the row_number/doc-count windows and the separate
-    verify-array aggregation fold into this aggregate; the persisted
-    multi-consumer is the per-DOC array frame, corpus-sized), the
-    prefix equi-join with the PPJoin positional filter applied AT
-    candidate aggregation, then a verify join that is
-    candidate-PROPORTIONAL: each surviving pair fetches two sorted
-    shingle arrays and intersects them JVM-side via array_intersect —
-    never the O(|cand| x doc_len) row expansion (measured to spill
-    >80 GB on a dense-df 10x fixture; SCALE.md round-7). A boilerplate shingle shared by f docs lands in
-    prefixes only for docs where it ranks inside the top
-    |d|-ceil(t|d|)+1 RAREST — at a realistic t (>= 0.5) a hot shingle
-    is almost never in any prefix, so the f² blowup the df cap guards
-    against elsewhere cannot happen here; when the WHOLE df distribution
-    is dense (no rare shingles exist), candidates grow and the
-    positional filter + array verify keep the cost linear in the
-    candidate count.
+    Scale: at a realistic t (>= 0.5) a hot shingle is almost never in
+    any prefix, so the f² blowup the df cap guards against elsewhere
+    cannot happen; when the WHOLE df distribution is dense (no rare
+    shingles), candidates grow and the positional filter + array verify
+    keep the cost linear in the candidate count. The df branch
+    re-derives the map-only shingle stream (no exchange in its lineage
+    to reuse); measured at sf0.1, that second shingle pass costs less
+    than the full-stream exchange + sort of a df window.
 
     Output: (doc_a, doc_b, inter, jaccard) with doc_a < doc_b,
     jaccard rounded 6 dp (filtering happens on the raw double, computed
     identically in both engines).
     """
-    # spread_key (r12): the per-doc array fold below is the stream's
-    # full-width consumer — hash(id) on the document rows replaces the
-    # shingle-stream exchange its groupBy would otherwise insert.
+    if not 0.0 < threshold <= 1.0:
+        raise ValueError(f"threshold must be in (0, 1], got {threshold}")
+    if n < 1:
+        raise ValueError(f"shingle size n must be >= 1, got {n}")
     sh = shingles(docs, n=n, id_col=id_col, text_col=text_col, spread_key=True)
-    # df via a map-side-collapsing groupBy + broadcast join (r12; guide
-    # §2.3, §3.1 — the c82 shape): the r11 form stamped df with a COUNT
-    # WINDOW over the shingle key, pushing the whole (doc, shingle)
-    # stream through an exchange + sort. Each (doc, shingle) row is
-    # unique (shingles() dedups per doc), so df = count per shingle — a
-    # groupBy whose partial aggregation collapses to per-partition
-    # distinct shingles before its (tiny) exchange, broadcast-joined
-    # back onto the stream. The df branch re-derives the map-only
-    # shingle stream (scan + split + slices — no exchange in its
-    # lineage, so nothing to reuse); A/B'd against the window form at
-    # sf0.1: the second shingle pass costs less than the full-stream
-    # exchange + sort it replaces. The (df, shingle) pairs then
-    # collapse into ONE sorted struct array per doc (r11, the c82
-    # shape): the global-rarity rank is the array POSITION, and the
-    # persisted multi-consumer is the per-DOC array frame — corpus
-    # rows, not shingle-stream rows.
-    sh_df = sh.groupBy("shingle").agg(F.count("*").alias("df"))
-    docarr = scoped_persist(
-        sh.join(F.broadcast(sh_df), "shingle")
-        .groupBy(F.col(id_col).alias("__id"))
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct(F.col("df"), F.col("shingle")))
-            ).alias("__arr")
-        )
-        .select("__id", "__arr", F.size("__arr").alias("n_sh"))
-    )
+    # t*|d| in doubles can land one ulp above an integer (0.56 * 25 ->
+    # 14.000000000000002), and a ceil one too high shortens the prefix
+    # below what the verify's double comparison admits; the epsilon can
+    # only lengthen a prefix, which adds candidates the verify drops.
+    n_sh = F.col("__n")
     prefix_len = (
-        F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh")) + F.lit(1)
+        n_sh - F.ceil(F.lit(threshold) * n_sh - F.lit(1e-9)) + F.lit(1)
     ).cast("int")
-    prefix = docarr.select(
-        "__id",
-        "n_sh",
-        F.posexplode(F.slice("__arr", F.lit(1), prefix_len)).alias(
-            "pos", "__pt"
+    cand, arrays = _rarity_prefix_candidates(
+        sh,
+        id_col,
+        "shingle",
+        prefix_len,
+        # overlap >= t/(1+t)*(n_a+n_b), epsilon-guarded on the safe side
+        bound=lambda ub, na, nb: (
+            F.lit(1.0 + threshold) * ub.cast("double")
+            >= F.lit(threshold) * (na + nb).cast("double") - F.lit(1e-9)
         ),
-    ).select(
-        F.col("__id").alias(id_col),
-        "n_sh",
-        (F.col("pos") + 1).alias("rnk"),
-        F.col("__pt.shingle").alias("shingle"),
     )
-    a = prefix.select(
-        F.col(id_col).alias("doc_a"),
-        "shingle",
-        F.col("rnk").alias("ia"),
-        F.col("n_sh").alias("pna"),
-    )
-    b = prefix.select(
-        F.col(id_col).alias("doc_b"),
-        "shingle",
-        F.col("rnk").alias("ib"),
-        F.col("n_sh").alias("pnb"),
-    )
-    # candidate aggregation replaces the old distinct at identical
-    # shuffle cost and adds the PPJoin positional filter: with both
-    # shingle lists sorted by the SAME global (df, shingle) order, every
-    # common shingle ordered before the pair's LAST shared prefix
-    # shingle lies inside both prefixes (positions < max rank <= prefix
-    # length), hence is already counted in s — so
-    #   overlap <= s + min(n_a - max_ia, n_b - max_ib).
-    # Pairs whose bound cannot reach the threshold overlap
-    # t/(1+t)*(n_a+n_b) are pruned BEFORE verification (epsilon-guarded
-    # on the safe side, so completeness is preserved).
-    cand = (
-        a.join(b, "shingle")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(
-            F.count("*").alias("s"),
-            F.max("ia").alias("mi"),
-            F.max("ib").alias("mj"),
-            F.max("pna").alias("bna"),
-            F.max("pnb").alias("bnb"),
+    arr_a, arr_b = (
+        arrays.select(
+            F.col("__id").alias(f"doc_{s}"),
+            F.col("__toks").alias(f"s{s}"),
+            F.col("__n").alias(f"n_{s}"),
         )
-        .filter(
-            (F.lit(1.0 + threshold))
-            * (
-                F.col("s")
-                + F.least(
-                    F.col("bna") - F.col("mi"), F.col("bnb") - F.col("mj")
-                )
-            ).cast("double")
-            >= F.lit(threshold)
-            * (F.col("bna") + F.col("bnb")).cast("double")
-            - F.lit(1e-9)
-        )
-        .select("doc_a", "doc_b")
-    )
-    # candidate-proportional verify: per-doc SORTED shingle arrays
-    # attach via two equi-joins and the exact intersection runs
-    # JVM-side in array_intersect — O(|cand|) rows, never the old
-    # O(|cand| x doc_len) expansion whose sort spill exhausted local
-    # disk on a dense-df corpus (10x fixture, SCALE.md round-7 entry).
-    # The arrays come straight off the persisted per-doc frame — the
-    # struct array projects to its shingle components in place (order
-    # is (df, shingle) instead of lexicographic; array_intersect is
-    # order-independent, and shingles are unique per doc).
-    arrays = docarr.select(
-        F.col("__id").alias(id_col),
-        F.expr("transform(__arr, x -> x.shingle)").alias("sids"),
-        "n_sh",
-    )
-    arr_a = arrays.select(
-        F.col(id_col).alias("doc_a"),
-        F.col("sids").alias("sa"),
-        F.col("n_sh").alias("n_a"),
-    )
-    arr_b = arrays.select(
-        F.col(id_col).alias("doc_b"),
-        F.col("sids").alias("sb"),
-        F.col("n_sh").alias("n_b"),
+        for s in "ab"
     )
     inter_col = F.size(F.array_intersect(F.col("sa"), F.col("sb")))
     jacc = F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter"))
@@ -1788,8 +1786,9 @@ def edit_distance_pairs(
 ) -> DataFrame:
     """EXACT edit-distance self-join (Ed-Join family — Gravano et al.
     VLDB'01 count filter, Xiao et al. VLDB'08 prefix filter; public
-    algorithms): all document pairs with Levenshtein distance <= ``k``,
-    complete by theorem — no blocking heuristic, no approximation.
+    algorithms): all document pairs with Levenshtein distance <= ``k``
+    (k >= 0), complete by theorem — no blocking heuristic, no
+    approximation.
 
     Contrast :func:`fuzzy_name_pairs`, which blocks on the last token —
     a recall HEURISTIC (a pair disagreeing in its final token is never
@@ -1802,76 +1801,51 @@ def edit_distance_pairs(
        exact multiset semantics on repetitive text ("batch batch ...").
     2. COUNT FILTER: one edit destroys at most q grams, so
        ed(a,b) <= k implies |Ga ∩ Gb| >= max(|Ga|, |Gb|) - q*k.
-    3. PREFIX FILTER: order every doc's grams by the global (df, gram)
-       rarity order and call its first q*k + 1 grams the prefix. If two
-       docs share NO prefix gram, their overlap fits inside one doc's
-       suffix of size |G| - (q*k + 1), i.e. overlap <= |G| - q*k - 1
-       < |G| - q*k — violating the count filter. So every true pair
-       with a POSITIVE count bound shares a prefix gram, and the
-       candidate join runs over PREFIX streams only (each doc's q*k+1
-       globally-RAREST grams). Pairs where BOTH docs have <= q*k grams
-       make the bound vacuous and come from the dedicated short-band
-       length-bucket join below instead (completeness hole caught by
-       the hypothesis brute-force twin, round 8).
-    4. Candidates pass the LENGTH filter (||a|-|b|| <= k) and the
-       PPJoin POSITIONAL filter (overlap <= s + min(n_a - max_ia,
-       n_b - max_ib); Xiao et al. WWW'08, the same bound c72's sweep
-       test certifies) AT CANDIDATE AGGREGATION — integer comparisons
-       on the (doc_a, doc_b) groupBy, BEFORE anything heavy attaches.
-       Survivors then fetch two sorted occurrence-token arrays, pass
-       the full count filter via ``array_intersect``
-       (candidate-proportional, never an O(|cand| x doc_len) row
-       expansion), and finally the exact JVM-side ``levenshtein`` <= k.
+    3. PREFIX FILTER: with prefix length q*k + 1, the count filter needs
+       more overlap than a suffix of |G| - q*k - 1 grams holds, so the
+       prefix theorem of :func:`_rarity_prefix_candidates` applies:
+       every true pair with a POSITIVE count bound shares one of its
+       q*k+1 globally-RAREST grams. Pairs where BOTH docs have <= q*k
+       grams make the bound vacuous and come from the dedicated
+       short-band length-bucket join instead (a completeness hole the
+       hypothesis brute-force twin caught).
+    4. Candidates pass the LENGTH filter (||a|-|b|| <= k) on the joined
+       prefix rows and the positional bound against the count filter at
+       candidate aggregation. Survivors then fetch two occurrence-token
+       arrays, pass the full count filter via ``array_intersect``, and
+       finally the exact JVM-side ``levenshtein`` <= k.
 
-    Scale: one corpus scan (widened before the gram explode — the
-    per-doc q-gram generation is the operator's densest per-row work
-    and a compact file otherwise runs it on 1-2 cores), ONE gram-keyed
-    occurrence-count shuffle shared by both consumers (r11 removed a df
-    groupBy + distributed-prefix-sum dense-id assignment + two attach
-    joins — the dense ids existed only to make the verify arrays
-    narrow, but the occurrence-numbered grams are themselves short
-    fixed-width strings, so intersecting THEM directly costs almost the
-    same per element and saves four exchanges plus a checkpoint per
-    call, measured 9.9s -> 5.7s at sf0.1, identical 106 output pairs;
-    r12 then replaced the r11 df COUNT WINDOW — a second full
-    token-stream exchange + sort — with a map-side-collapsing df
-    groupBy broadcast-joined back, see the inline comment), then ONE
-    per-doc groupBy collapsing each doc's (df, tok) pairs into a sorted
-    array whose POSITION is the global-rarity rank (r11 again: the
-    row_number window and the separate per-side verify-array
-    aggregations fold into this one aggregate; the persisted
-    multi-consumer is the per-DOC array frame, corpus-sized, not the
-    token stream), a prefix equi-join filtered at aggregation, and a
-    verify stage linear in SURVIVING candidates. Filter order
-    matters measurably: the 10x scale step (SCALE.md round-7 batch-11)
-    showed this corpus's q-gram df distribution is DENSE at every q
-    (tiny synthetic vocabulary — max df grew 10x with the corpus, for
-    q in {3,5,7}), so raw prefix-join pairs grew quadratically (652k ->
-    68.7M) and attaching arrays to raw candidates spilled 58 GB; with
-    the length + positional filters pushed into the aggregation the
-    attach set is 12-15x smaller, and the exact count filter then kills
-    >99.7% of what remains before the O(len^2) DP (measured 43,128 ->
-    103 at sf0.1). On a natural-text corpus rare grams exist and the
-    prefix join itself stays near-linear; the dense-vocab case is the
-    adversarial floor, where the right tool shifts to the capped/LSH
-    near-dup family. Strings shorter than q have no grams and are
-    excluded (caller guards; the registered query corpus has min
-    length >> q).
+    Scale: one corpus scan; the document rows are hash-spread by id
+    before the gram explode, so the gram generation runs at full width
+    even on a compactly-written file and the token stream (~q× the text
+    bytes) crosses no exchange. Filter order matters: this corpus's
+    q-gram df distribution is DENSE at every q (tiny synthetic
+    vocabulary; SCALE.md round-7 batch-11), so raw prefix-join pairs
+    grow quadratically (652k -> 68.7M at 10x) and attaching arrays to
+    raw candidates spilled 58 GB; with the length + positional filters
+    in the aggregation the attach set is 12-15x smaller, and the exact
+    count filter then kills >99.7% of what remains before the O(len^2)
+    DP (43,128 -> 103 at sf0.1). On natural text rare grams exist and
+    the prefix join stays near-linear; the dense-vocab case is the
+    adversarial floor, where the capped/LSH near-dup family is the
+    right tool. Strings shorter than q have no grams and are excluded.
 
     ``min_len`` is a caller-CERTIFIED lower bound on ``length(text)``
     (0 = no claim). When min_len > q*k + q - 1 the short band is empty
     by construction and its whole subplan (a second corpus scan, an
-    explode and a self-join) is elided — the r8 completeness fix cost
-    ~15% of c82's wall on a corpus whose length filter (200..400 chars)
-    makes the band impossible. The bound must be a property of the
-    input (e.g. the pushed-down length predicate that BUILT the
-    corpus), never a guess: an understated min_len only wastes the
-    empty subplan; an OVERSTATED one silently drops both-short pairs.
+    explode and a self-join) is elided — ~15% of c82's wall on a corpus
+    whose length filter (200..400 chars) makes the band impossible. The
+    bound must be a property of the input (e.g. the pushed-down length
+    predicate that BUILT the corpus), never a guess: an understated
+    min_len only wastes the empty subplan; an OVERSTATED one silently
+    drops both-short pairs.
 
     Output: (doc_a, doc_b, dist) with doc_a < doc_b, dist <= k.
     """
     from sheetsetl_spark.operators.skew import spread_by_key
 
+    if k < 0 or q < 1:
+        raise ValueError(f"need k >= 0 and q >= 1, got k={k}, q={q}")
     base = docs.select(
         F.col(id_col).alias("__id"),
         F.col(text_col).alias("__text"),
@@ -1881,17 +1855,11 @@ def edit_distance_pairs(
     # the occurrence sequence — one groupBy, no per-doc-gram window.
     # __len rides along in the group key (constant per doc) so the
     # length filter reaches candidate aggregation without a base join.
-    # The document rows are hash-spread by __id BEFORE the explode
-    # (r12, guide §2.4/§2.3): hash(__id) satisfies the clustered
+    # hash(__id) on the document rows satisfies the clustered
     # distribution of BOTH downstream groupBys — the occurrence count
     # keyed (__id, __len, gram) and the per-doc array fold keyed
-    # (__id, __len) — so the q-gram/token stream (~q× the text bytes)
-    # crosses NO exchange at all; the compact document rows cross once.
-    # This replaces the r11 round-robin widen (which only spread a
-    # narrow scan and left both token-stream exchanges in place) and
-    # subsumes its job: spread_by_key always repartitions to
-    # max(cores, scan splits), so the gram generation still runs at
-    # full width on a compactly-written file.
+    # (__id, __len) — and the df aggregate and the token stream hang off
+    # the SAME occurrence-count subtree, so the gram generation runs once.
     grams = spread_by_key(base, ["__id"]).select(
         "__id",
         "__len",
@@ -1917,107 +1885,28 @@ def edit_distance_pairs(
             F.concat_ws("\x1f", "gram", F.col("occ").cast("string")).alias("tok"),
         )
     )
-    # df via a map-side-combining groupBy + broadcast join (r12; guide
-    # §2.3 "aggregate before you shuffle", §3.1): the r11 form computed
-    # df as a COUNT WINDOW over the token key, which pushed the ENTIRE
-    # occurrence-numbered token stream through an exchange + sort just
-    # to stamp one integer on each row. Each (doc, tok) row is unique,
-    # so df = count per tok — a groupBy whose partial aggregation
-    # collapses the stream to per-partition distinct toks before the
-    # exchange (shuffle bytes ~ |distinct grams x occ|, not |token
-    # stream|), joined back as a broadcast build (char q-gram vocab is
-    # |alphabet|^q-bounded times the occurrence tail — KBs at fixture
-    # scale, broadcastable at corpus scale; if a corpus ever blows that
-    # bound, the window form is the fallback). Both the df aggregate
-    # and the token stream hang off the SAME occurrence-count exchange
-    # (identical canonicalized subtree -> ReuseExchange), so the gram
-    # generation and its shuffle run once. The (df, tok) pairs then
-    # collapse into ONE sorted array per doc: the global-rarity rank is
-    # the array POSITION (r11), and the per-doc frame — corpus rows,
-    # not token rows — is the only multi-consumer and the only thing
-    # persisted.
-    tok_df = toks.groupBy("tok").agg(F.count("*").alias("df"))
-    docarr = scoped_persist(
-        toks.join(F.broadcast(tok_df), "tok")
-        .groupBy("__id", "__len")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct(F.col("df"), F.col("tok")))
-            ).alias("__arr")
-        )
-        .select("__id", "__len", "__arr", F.size("__arr").alias("n_g"))
-    )
-    prefix = docarr.select(
+    qk = F.lit(q * k)
+    cand, arrays = _rarity_prefix_candidates(
+        toks,
         "__id",
-        "__len",
-        "n_g",
-        F.posexplode(F.expr(f"slice(__arr, 1, {q * k + 1})")).alias("pos", "__pt"),
-    ).select(
-        "__id",
-        "__len",
-        "n_g",
-        (F.col("pos") + 1).alias("rnk"),
-        F.col("__pt.tok").alias("tok"),
-    )
-    a = prefix.select(
-        F.col("__id").alias("doc_a"),
         "tok",
-        F.col("rnk").alias("ia"),
-        F.col("n_g").alias("pna"),
-        F.col("__len").alias("pla"),
-    )
-    b = prefix.select(
-        F.col("__id").alias("doc_b"),
-        "tok",
-        F.col("rnk").alias("ib"),
-        F.col("n_g").alias("pnb"),
-        F.col("__len").alias("plb"),
-    )
-    # length filter on the join rows, positional filter on the group:
-    # both grams lists sort by the same global (df, tok) order, so every
-    # common token ordered before the pair's last shared prefix token is
-    # itself counted in s — overlap <= s + min(n_a - max_ia, n_b -
-    # max_ib). A true pair needs overlap >= max(n_a, n_b) - q*k, so the
-    # integer comparison below prunes only provably-impossible pairs.
-    cand = (
-        a.join(b, "tok")
-        .filter(
-            (F.col("doc_a") < F.col("doc_b"))
-            & (F.abs(F.col("pla") - F.col("plb")) <= F.lit(k))
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(
-            F.count("*").alias("__s"),
-            F.max("ia").alias("__mi"),
-            F.max("ib").alias("__mj"),
-            F.max("pna").alias("__bna"),
-            F.max("pnb").alias("__bnb"),
-        )
-        .filter(
-            (
-                F.col("__s")
-                + F.least(
-                    F.col("__bna") - F.col("__mi"), F.col("__bnb") - F.col("__mj")
-                )
-                >= F.greatest(F.col("__bna"), F.col("__bnb")) - F.lit(q * k)
-            )
-            # both-short pairs are owned ENTIRELY by the short-band path
-            # (n_g <= q*k <=> len <= q*k + q - 1), so excluding them
-            # here makes the two candidate streams provably DISJOINT —
-            # the union below needs no corpus-wide distinct shuffle
-            & ~(
-                (F.col("__bna") <= F.lit(q * k))
-                & (F.col("__bnb") <= F.lit(q * k))
-            )
-        )
-        .select("doc_a", "doc_b")
+        F.lit(q * k + 1),
+        # positional bound against the count filter; both-short pairs
+        # (grams <= q*k <=> len <= q*k + q - 1) are owned ENTIRELY by the
+        # short band, so the two candidate streams are provably DISJOINT
+        # and the union below needs no corpus-wide distinct shuffle
+        bound=lambda ub, na, nb: (
+            (ub >= F.greatest(na, nb) - qk) & ~((na <= qk) & (nb <= qk))
+        ),
+        carry=("__len",),
+        pair_filter=F.abs(F.col("__len_a") - F.col("__len_b")) <= F.lit(k),
     )
     # SHORT-BAND completeness path: the count bound overlap >=
     # max(n_a, n_b) - q*k is vacuous when BOTH docs have <= q*k grams
     # (len <= q*k + q - 1) — such a pair can be within distance k while
     # sharing ZERO grams ("alpha alpha" vs "beta beta" at k=8), so the
-    # gram join alone is incomplete there (caught by the hypothesis
-    # brute-force twin, r8). Mixed short-long true pairs always share a
+    # gram join alone is incomplete there (the hypothesis brute-force
+    # twin pins this case). Mixed short-long true pairs always share a
     # prefix gram (required overlap >= n_long - q*k > 0), so only the
     # both-short band needs candidates of its own: a length-bucketed
     # equi-join (bucket width k+1; emitting each side to {b, b+1} makes
@@ -2054,29 +1943,16 @@ def edit_distance_pairs(
             .distinct()
         )
         cand = cand.unionByName(short_cand)
-    # verify arrays come straight off the persisted per-doc frame — the
-    # struct array projects to its tok components in place (order is
-    # (df, tok) instead of lexicographic; array_intersect is
-    # order-independent, and toks are unique per doc)
-    arrays = docarr.select(
-        "__id",
-        F.expr("transform(__arr, x -> x.tok)").alias("toks"),
-        "n_g",
-    )
     side = base.join(arrays, "__id")
-    arr_a = side.select(
-        F.col("__id").alias("doc_a"),
-        F.col("toks").alias("ga"),
-        F.col("n_g").alias("na"),
-        F.col("__text").alias("ta"),
-        F.col("__len").alias("la"),
-    )
-    arr_b = side.select(
-        F.col("__id").alias("doc_b"),
-        F.col("toks").alias("gb"),
-        F.col("n_g").alias("nb"),
-        F.col("__text").alias("tb"),
-        F.col("__len").alias("lb"),
+    arr_a, arr_b = (
+        side.select(
+            F.col("__id").alias(f"doc_{s}"),
+            F.col("__toks").alias(f"g{s}"),
+            F.col("__n").alias(f"n{s}"),
+            F.col("__text").alias(f"t{s}"),
+            F.col("__len").alias(f"l{s}"),
+        )
+        for s in "ab"
     )
     overlap = F.size(F.array_intersect(F.col("ga"), F.col("gb")))
     return (

@@ -801,6 +801,33 @@ def test_minhash_lsh_reuses_cached_shingle_stream(spark):
     spark.catalog.clearCache()
 
 
+@pytest.mark.parametrize(
+    "op, kwargs, match",
+    [
+        ("prefix_filter_jaccard_pairs", {"threshold": 0.0}, "threshold"),
+        ("prefix_filter_jaccard_pairs", {"threshold": -0.5}, "threshold"),
+        ("prefix_filter_jaccard_pairs", {"threshold": 1.5}, "threshold"),
+        ("prefix_filter_jaccard_pairs", {"threshold": 0.5, "n": 0}, "shingle size"),
+        ("edit_distance_pairs", {"k": -1}, "k >= 0"),
+        ("edit_distance_pairs", {"k": 2, "q": 0}, "q >= 1"),
+        ("minhash_lsh_pairs", {"threshold": 0.5, "bands": 0}, "bands"),
+        ("minhash_lsh_pairs", {"threshold": 0.5, "bands": -8}, "bands"),
+        ("minhash_lsh_pairs", {"threshold": 0.5, "num_hashes": 0, "bands": 1}, "bands"),
+        ("minhash_estimate_audit", {"threshold": 0.5, "bands": 0}, "bands"),
+        ("minhash_estimate_audit", {"threshold": 0.5, "bands": -4}, "bands"),
+    ],
+)
+def test_similarity_joins_reject_degenerate_parameters(spark, op, kwargs, match):
+    """Parameters outside each join's contract raise ValueError when the
+    operator is called, instead of silently dropping pairs, scoring
+    every pair 1.0, or failing later inside Spark."""
+    docs = spark.createDataFrame(
+        [(0, "a b c d"), (1, "a b c e"), (2, "x y z w")], "doc_id long, text string"
+    )
+    with pytest.raises(ValueError, match=match):
+        getattr(dedup, op)(docs, **kwargs)
+
+
 def test_gopher_flags_zero_shuffle_and_rules(spark):
     from sheetsetl_spark.operators.text import gopher_quality_flags
 

@@ -7,6 +7,8 @@ visible in the executed plan."""
 
 from __future__ import annotations
 
+import re
+
 from sheetsetl_spark.queries import QUERIES
 from tests.conftest import SF_SMALL
 
@@ -205,13 +207,30 @@ def test_edit_distance_join_equi_joins_only(spark):
     """c82: candidate generation (prefix-gram equi-join) and the
     candidate-proportional verify are equi-joins JVM-side — no cartesian
     product, no Python nodes, and no corpus-level single-partition
-    window (the dense gram ids come from the prefix-sum decomposition)."""
+    window (the gram rarity rank is a position in a per-document sorted
+    array, not a global window)."""
     df = QUERIES["c82_edit_distance_join"](spark, SF_SMALL)
     plan = _executed_plan(df)
     assert "CartesianProduct" not in plan, plan
     for marker in _PY_NODES:
         assert marker not in plan, marker
     assert not _single_partition_windows(plan), _single_partition_windows(plan)
+
+
+def test_minhash_estimate_verify_intersects_arrays(spark):
+    """c107: the exact Jaccard intersects the two per-document shingle
+    arrays of the persisted signature frame — no join keyed on shingle
+    explodes |cand| x doc_len rows. The only shingle-keyed join left is
+    the df cap's broadcast anti-join."""
+    df = QUERIES["c107_minhash_jaccard_estimate"](spark, SF_SMALL)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    shingle_joins = [
+        ln.strip()
+        for ln in plan.splitlines()
+        if re.search(r"Join \w+, .*shingle#", ln) and "Join LeftAnti" not in ln
+    ]
+    assert not shingle_joins, shingle_joins
+    assert "array_intersect" in plan, plan
 
 
 def test_substring_decontamination_broadcasts_probes(spark):

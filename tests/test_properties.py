@@ -11,7 +11,7 @@ from __future__ import annotations
 from datetime import datetime, timedelta
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
@@ -405,6 +405,56 @@ def test_edit_distance_pairs_short_band_zero_shared_grams(spark):
         for r in edit_distance_pairs(df, k=8, q=3).collect()
     }
     assert got == {(0, 1): 8, (0, 2): 0, (1, 2): 8}
+
+
+# --- prefix-filter Jaccard join: completeness + exactness -----------------
+
+_PF_WORDS = ["a", "b", "c", "d", "e"]
+_pf_doc = st.lists(st.sampled_from(_PF_WORDS), min_size=0, max_size=9).map(
+    " ".join
+)
+# 25 words against their last 14: Jaccard 14/25 == 0.56 in doubles, while
+# 0.56 * 25 rounds to 14.000000000000002, one ulp above the integer the
+# prefix length is computed from.
+_PF_ULP_CASE = [
+    " ".join(f"w{i:02d}" for i in range(25)),
+    " ".join(f"w{i:02d}" for i in range(11, 25)),
+]
+
+
+@settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    texts=st.lists(_pf_doc, min_size=2, max_size=10),
+    n=st.integers(1, 3),
+    threshold=st.floats(0.0, 1.0, exclude_min=True),
+)
+@example(texts=_PF_ULP_CASE, n=1, threshold=0.56)
+def test_prefix_filter_jaccard_pairs_equals_bruteforce(spark, texts, n, threshold):
+    """For ANY corpus, shingle size and threshold in (0, 1], the
+    prefix-filtered join must equal the brute-force all-pairs Jaccard
+    exactly. Small-vocab docs make the df distribution dense, and docs
+    shorter than n words have no shingles and never pair."""
+    from sheetsetl_spark.operators.dedup import prefix_filter_jaccard_pairs
+
+    rows = [(i, t) for i, t in enumerate(texts)]
+    df = spark.createDataFrame(rows, "doc_id bigint, text string")
+    got = {
+        (r.doc_a, r.doc_b): r.inter
+        for r in prefix_filter_jaccard_pairs(df, threshold=threshold, n=n).collect()
+    }
+
+    def shset(t):
+        w = t.split(" ")
+        return {" ".join(w[i : i + n]) for i in range(len(w) - n + 1)}
+
+    sets = [(i, shset(t)) for i, t in rows]
+    want = {}
+    for j, (ia, sa) in enumerate(sets):
+        for ib, sb in sets[j + 1 :]:
+            inter, union = len(sa & sb), len(sa | sb)
+            if union and inter / union >= threshold:
+                want[(ia, ib)] = inter
+    assert got == want
 
 
 # --- quantile normalization: brute-force mapping on random groups ----------
