@@ -121,15 +121,12 @@ def _shingle_overlaps(
     id_col: str,
     text_col: str,
     max_shingle_df: int | None,
-    persist: bool,
 ) -> DataFrame:
     """(doc_a, doc_b, inter, n_a, n_b) for every doc pair sharing a shingle,
     doc_a < doc_b: the shingle equi-self-join over the df-capped universe
     that :func:`ngram_jaccard_pairs` and :func:`containment_pairs` score.
     ``inter`` is the shared-shingle count, ``n_a``/``n_b`` the sizes."""
-    raw = shingles(docs, n=n, id_col=id_col, text_col=text_col)
-    if persist:
-        raw = scoped_persist(raw)
+    raw = scoped_persist(shingles(docs, n=n, id_col=id_col, text_col=text_col))
     sh = _drop_hot_keys(raw, ["shingle"], max_shingle_df) if max_shingle_df else raw
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
 
@@ -156,7 +153,6 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_shingle_df: int | None = 1000,
-    persist: bool = True,
 ) -> DataFrame:
     """C2: near-duplicate pairs by word-n-gram Jaccard similarity.
 
@@ -175,12 +171,15 @@ def ngram_jaccard_pairs(
     and each consumer's anti-join is a broadcast filter over cache
     reads — strictly one corpus scan for the whole pipeline.
 
-    ``persist=False`` skips caching (recompute per consumer): for
-    repeated small-input invocations — a foreachBatch sink calling this
-    once per micro-batch — per-call persists would accumulate in the
-    CacheManager for the session lifetime."""
+    The returned pairs stay lazy, so the cache entry outlives the call:
+    Spark's cache manager keys on the canonicalized plan, so repeated
+    calls over the same input reuse one entry, but a caller running this
+    over ever-new inputs — a foreachBatch sink calling it once per
+    micro-batch — wraps call and consumption in
+    ``sheetsetl_spark.cache.cache_scope()``, which unpersists the entry
+    when the block ends."""
     return (
-        _shingle_overlaps(docs, n, id_col, text_col, max_shingle_df, persist)
+        _shingle_overlaps(docs, n, id_col, text_col, max_shingle_df)
         .select(
             "doc_a",
             "doc_b",
@@ -199,7 +198,6 @@ def containment_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_shingle_df: int | None = 1000,
-    persist: bool = True,
 ) -> DataFrame:
     """C2: DIRECTIONAL near-dup pairs by n-gram containment
     |A ∩ B| / |A| — the excerpt/quotation detector Jaccard misses: a short
@@ -212,8 +210,8 @@ def containment_pairs(
     Same candidate discipline as :func:`ngram_jaccard_pairs` (shingle
     equi-self-join over the df-capped universe — the intersection is
     computed ONCE per unordered pair, then both directional ratios derive
-    from it), same single-scan persist contract."""
-    scored = _shingle_overlaps(docs, n, id_col, text_col, max_shingle_df, persist)
+    from it), same single-scan persist and ``cache_scope`` contract."""
+    scored = _shingle_overlaps(docs, n, id_col, text_col, max_shingle_df)
     # Emit both directions by exploding a 2-struct array, NOT a union of
     # two selects: a union would duplicate the whole candidate pipeline
     # (verified: 0 ReusedExchange), doubling the intersection cost.
@@ -308,20 +306,44 @@ def minhash_signatures(
     return sh.groupBy(id_col).agg(*mins)
 
 
-def _band_keys(bands: int, rows_per_band: int, hash_family: str = "xxhash64") -> list:
-    """One LSH bucket-key column ``band_{b}`` per band over the ``mh_*``
-    signature columns. In the portable md5 mode the raw ':'-joined band
-    value IS the bucket key (band hashing is only a width optimization),
-    so a DuckDB twin can rebuild the buckets verbatim."""
+def _rows_per_band(num_hashes: int, bands: int) -> int:
+    """The banding contract of every MinHash entry point: the
+    ``num_hashes`` signature components split into ``bands`` >= 1 bands
+    of r = num_hashes / bands rows, so ``bands`` must divide
+    ``num_hashes`` >= 1; anything else is a ValueError. Returns r."""
+    if bands < 1 or num_hashes < 1 or num_hashes % bands:
+        raise ValueError(
+            f"bands must be >= 1 and divide num_hashes >= 1, "
+            f"got num_hashes={num_hashes}, bands={bands}"
+        )
+    return num_hashes // bands
 
-    def key(b: int):
+
+def _band_stack(
+    sig: DataFrame, id_col: str, bands: int, rows_per_band: int, hash_family: str, *carry
+) -> DataFrame:
+    """(``id_col``, *carry, band_idx, band_hash): the ``mh_*`` signature
+    frame in band-exploded long form, one row per document and band.
+    ``carry`` columns (names or aliased Columns over ``sig``) ride along.
+    The bucket key of band b hashes its r ``mh_*`` components; in the
+    portable md5 mode the raw ':'-joined band value IS the key (band
+    hashing is only a width optimization), so a DuckDB twin can rebuild
+    the buckets verbatim."""
+
+    def key(b: int) -> Column:
         mh = [F.col(f"mh_{b * rows_per_band + j}") for j in range(rows_per_band)]
         return F.concat_ws(":", *mh) if hash_family == "md5" else F.xxhash64(*mh)
 
-    return [key(b).alias(f"band_{b}") for b in range(bands)]
+    banded = sig.select(F.col(id_col), *carry, *[key(b).alias(f"band_{b}") for b in range(bands)])
+    return banded.select(
+        *banded.columns[:-bands],
+        F.posexplode(F.array(*[F.col(f"band_{b}") for b in range(bands)])).alias(
+            "band_idx", "band_hash"
+        ),
+    )
 
 
-def _minhash_band_candidates(
+def _minhash_band_side(
     docs: DataFrame,
     num_hashes: int,
     bands: int,
@@ -329,54 +351,31 @@ def _minhash_band_candidates(
     id_col: str,
     text_col: str,
     max_shingle_df: int | None,
-    max_bucket_size: int | None,
     hash_family: str,
 ) -> tuple[DataFrame, DataFrame]:
-    """MinHash + LSH banding candidate pairs, shared by
-    :func:`minhash_lsh_pairs` and :func:`minhash_estimate_audit`.
+    """One side of a MinHash band join: ``(sig, stacked)`` for ``docs``.
 
-    BANDING: the ``num_hashes`` signature components split into
-    ``bands`` bands of r = num_hashes / bands rows (``bands`` >= 1 must
-    divide ``num_hashes``, else ``ValueError``). Two documents are a
-    candidate when they agree on every row of at least one band — a
-    pair at Jaccard j collides with probability 1 - (1 - j^r)^bands.
-    Candidates come from the (band_idx, band key) equi-join, so the
-    signature table is O(docs) and the band join touches only colliding
-    documents; there is no all-pairs stage.
+    sig = (``id_col``, mh_0..mh_{k-1}, n_sh, sh_arr), one row per
+    document with at least one capped shingle; sh_arr is its sorted
+    distinct capped shingles and n_sh their count. stacked = (``id_col``,
+    n_sh, band_idx, band_hash), the :func:`_band_stack` of sig. The
+    banding contract is :func:`_rows_per_band`'s.
 
-    CAPS: ``max_shingle_df`` drops boilerplate shingles (document
-    frequency above the cap) before the signatures AND the shingle
-    arrays are built, so a verify over ``sh_arr`` scores the same capped
-    universe as :func:`ngram_jaccard_pairs` and equals it wherever
-    banding recall is 1. ``max_bucket_size`` (None = no cap) drops band
-    buckets with more members: a bucket of m near-identical templated
-    documents contributes m² candidates, and at corpus scale a
-    boilerplate-heavy source can put millions of documents in one
-    bucket. It is a recall guard that binds only on pathological
-    buckets far above any honest near-dup cluster size.
-
-    Returns ``(sig, candidates)``. sig = (``id_col``, mh_0..mh_{k-1},
-    n_sh, sh_arr), one row per document with at least one capped
-    shingle; sh_arr is its sorted distinct capped shingles and n_sh
-    their count. candidates = distinct (doc_a, doc_b, n_a, n_b) with
-    doc_a < doc_b; the Jaccard denominators come from the signature
-    groupBy and ride along the band join, so no size join follows.
+    ``max_shingle_df`` drops boilerplate shingles (document frequency
+    above the cap, counted over ``docs``) before the signatures AND the
+    shingle arrays are built, so a verify over ``sh_arr`` scores the same
+    capped universe as :func:`ngram_jaccard_pairs`.
 
     Persistence: the raw shingle stream feeds the hot-shingle aggregate
     and the signature groupBy, so it is persisted and the df cap is a
-    broadcast anti-join over cache reads — one corpus shingling. The
-    signature frame feeds the band stack, the bucket cap's hot list and
-    the callers' verify, so it is persisted too. Spark's cache manager
-    keys on the canonicalized plan, so repeated calls over the same
-    input reuse the entries. The returned frames stay lazy, so the
+    broadcast anti-join over cache reads — one shingling of ``docs``.
+    The signature frame feeds the band stack, a bucket cap's hot list
+    and the callers' verify, so it is persisted too. Spark's cache
+    manager keys on the canonicalized plan, so repeated calls over the
+    same input reuse the entries. The returned frames stay lazy, so the
     entries cannot be unpersisted here: wrap call and consumption in
     ``sheetsetl_spark.cache.cache_scope()`` to bound their lifetime."""
-    if bands < 1 or num_hashes < 1 or num_hashes % bands:
-        raise ValueError(
-            f"bands must be >= 1 and divide num_hashes >= 1, "
-            f"got num_hashes={num_hashes}, bands={bands}"
-        )
-    rows_per_band = num_hashes // bands
+    rows_per_band = _rows_per_band(num_hashes, bands)
     # No spread_key: the signature groupBy consumes the stream through
     # the persist below, and a lazily-persisted plan is an unfinalized
     # AdaptiveSparkPlan whose output partitioning reads as Unknown at
@@ -399,32 +398,100 @@ def _minhash_band_candidates(
             with_arr_col=True,
         )
     )
-    banded = sig.select(F.col(id_col), "n_sh", *_band_keys(bands, rows_per_band, hash_family))
-    stacked = banded.select(
-        F.col(id_col),
-        "n_sh",
-        F.posexplode(F.array(*[F.col(f"band_{b}") for b in range(bands)])).alias(
-            "band_idx", "band_hash"
-        ),
+    return sig, _band_stack(sig, id_col, bands, rows_per_band, hash_family, "n_sh")
+
+
+def _minhash_band_candidates(
+    docs: DataFrame,
+    num_hashes: int,
+    bands: int,
+    n: int,
+    id_col: str,
+    text_col: str,
+    max_shingle_df: int | None,
+    max_bucket_size: int | None,
+    hash_family: str,
+) -> tuple[DataFrame, DataFrame]:
+    """MinHash + LSH banding candidate pairs within ``docs``, shared by
+    :func:`minhash_lsh_pairs` and :func:`minhash_estimate_audit`.
+
+    BANDING: two documents are a candidate when they agree on every row
+    of at least one band — a pair at Jaccard j collides with probability
+    1 - (1 - j^r)^bands for r = num_hashes / bands. Candidates come from
+    the (band_idx, band key) equi-self-join of the
+    :func:`_minhash_band_side` stack, so the signature table is O(docs)
+    and the band join touches only colliding documents; there is no
+    all-pairs stage. Wherever banding recall is 1 a verify over
+    ``sh_arr`` equals :func:`ngram_jaccard_pairs`.
+
+    ``max_bucket_size`` (None = no cap) drops band buckets with more
+    members: a bucket of m near-identical templated documents
+    contributes m² candidates, and at corpus scale a boilerplate-heavy
+    source can put millions of documents in one bucket. It is a recall
+    guard that binds only on pathological buckets far above any honest
+    near-dup cluster size.
+
+    Returns ``(sig, candidates)``: sig as in :func:`_minhash_band_side`
+    (same persistence and ``cache_scope`` contract); candidates =
+    distinct (doc_a, doc_b, n_a, n_b) with doc_a < doc_b — the Jaccard
+    denominators come from the signature groupBy and ride along the band
+    join, so no size join follows."""
+    sig, stacked = _minhash_band_side(
+        docs, num_hashes, bands, n, id_col, text_col, max_shingle_df, hash_family
     )
     if max_bucket_size is not None:
         stacked = _drop_hot_keys(stacked, ["band_idx", "band_hash"], max_bucket_size)
+    return sig, _band_join(stacked, stacked, id_col, F.col("doc_a") < F.col("doc_b"))
+
+
+def _band_join(
+    stack_a: DataFrame, stack_b: DataFrame, id_col: str, pair_filter: Column | None = None
+) -> DataFrame:
+    """Distinct (doc_a, doc_b, n_a, n_b) over the (band_idx, band_hash)
+    equi-join of two :func:`_band_stack` frames carrying ``n_sh``: doc_a
+    from ``stack_a``, doc_b from ``stack_b``, kept where ``pair_filter``
+    (over doc_a/doc_b/n_a/n_b) holds."""
     left, right = (
-        stacked.select(
+        stack.select(
             F.col(id_col).alias(f"doc_{s}"),
             F.col("n_sh").alias(f"n_{s}"),
             "band_idx",
             "band_hash",
         )
-        for s in "ab"
+        for s, stack in (("a", stack_a), ("b", stack_b))
     )
-    candidates = (
-        left.join(right, ["band_idx", "band_hash"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "n_a", "n_b")
-        .distinct()
+    pairs = left.join(right, ["band_idx", "band_hash"])
+    if pair_filter is not None:
+        pairs = pairs.filter(pair_filter)
+    return pairs.select("doc_a", "doc_b", "n_a", "n_b").distinct()
+
+
+def _array_jaccard_pairs(
+    candidates: DataFrame, sig_a: DataFrame, sig_b: DataFrame, id_col: str, threshold: float
+) -> DataFrame:
+    """(doc_a, doc_b, jaccard) for the (doc_a, doc_b, n_a, n_b)
+    ``candidates`` whose exact capped-shingle Jaccard, rounded 6 dp,
+    reaches ``threshold``. Verification is candidate-proportional: each
+    candidate fetches its two sorted shingle arrays from the persisted
+    signature frames (doc_a's from ``sig_a``, doc_b's from ``sig_b``)
+    and intersects them JVM-side, so the corpus is not re-scanned and no
+    |cand| x doc_len rows are exploded through a pair-keyed shuffle."""
+    a = sig_a.select(F.col(id_col).alias("doc_a"), F.col("sh_arr").alias("sa"))
+    b = sig_b.select(F.col(id_col).alias("doc_b"), F.col("sh_arr").alias("sb"))
+    inter_col = F.size(F.array_intersect(F.col("sa"), F.col("sb"))).cast("long")
+    return (
+        candidates.join(a, "doc_a")
+        .join(b, "doc_b")
+        .select("doc_a", "doc_b", "n_a", "n_b", inter_col.alias("inter"))
+        .select(
+            "doc_a",
+            "doc_b",
+            F.round(
+                F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")), 6
+            ).alias("jaccard"),
+        )
+        .filter(F.col("jaccard") >= threshold)
     )
-    return sig, candidates
 
 
 def minhash_lsh_pairs(
@@ -446,35 +513,15 @@ def minhash_lsh_pairs(
     This is the 100 TB path. Candidates, the banding contract
     (``bands`` must divide ``num_hashes``) and both caps
     (``max_shingle_df``, ``max_bucket_size``) are those of
-    :func:`_minhash_band_candidates`. With the shingle cap the output
-    equals :func:`ngram_jaccard_pairs` wherever banding recall is 1.
-
-    Verification is candidate-proportional: intersection sizes are
-    computed ONLY for LSH candidates, never all pairs. Each candidate
-    fetches its two sorted shingle arrays from the persisted signature
-    frame and intersects them JVM-side, so the corpus is not re-scanned
-    and no |cand| x doc_len rows are exploded through a pair-keyed
-    shuffle."""
+    :func:`_minhash_band_candidates`; the verify, computed ONLY for LSH
+    candidates, is :func:`_array_jaccard_pairs`. With the shingle cap
+    the output equals :func:`ngram_jaccard_pairs` wherever banding
+    recall is 1."""
     sig, candidates = _minhash_band_candidates(
         docs, num_hashes, bands, n, id_col, text_col,
         max_shingle_df, max_bucket_size, hash_family,
     )
-    a = sig.select(F.col(id_col).alias("doc_a"), F.col("sh_arr").alias("sa"))
-    b = sig.select(F.col(id_col).alias("doc_b"), F.col("sh_arr").alias("sb"))
-    inter_col = F.size(F.array_intersect(F.col("sa"), F.col("sb"))).cast("long")
-    return (
-        candidates.join(a, "doc_a")
-        .join(b, "doc_b")
-        .select("doc_a", "doc_b", "n_a", "n_b", inter_col.alias("inter"))
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")), 6
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
+    return _array_jaccard_pairs(candidates, sig, sig, id_col, threshold)
 
 
 def minhash_estimate_audit(
@@ -1266,7 +1313,6 @@ def incremental_neardup_filter(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_shingle_df: int | None = 1000,
-    persist: bool = True,
 ) -> DataFrame:
     """Incremental near-dup: drop new-batch documents that near-duplicate
     an EXISTING corpus (the daily-crawl-vs-history shape).
@@ -1276,76 +1322,29 @@ def incremental_neardup_filter(
     ingested), so each increment costs O(new + collisions), not
     O(corpus²). In production the corpus side's signatures are a stored
     table maintained across ingests; here they are derived inline from
-    the corpus DataFrame. Shingle df-caps apply per side (each side's
-    boilerplate is capped against its own frequency profile).
+    the corpus DataFrame. Each side is a :func:`_minhash_band_side`
+    (banding contract, persistence and ``cache_scope`` contract
+    included), so shingle df-caps apply per side: each side's
+    boilerplate is capped against its own frequency profile.
 
-    Verification computes true cross-side Jaccard only for band
-    collisions, so the kept set equals the exact-Jaccard answer whenever
-    banding recall is 1 (the same contract as minhash_lsh_pairs).
+    Verification is :func:`_array_jaccard_pairs` over the new × history
+    band collisions, so the kept set equals the exact-Jaccard answer
+    whenever banding recall is 1 (the same contract as
+    minhash_lsh_pairs).
 
     Output: the new-batch rows that survive (id + text + any other
     columns of ``new_docs``).
     """
-    rows_per_band = num_hashes // bands
-    # One persisted raw shingle stream per side: banding signatures AND
-    # verification read the cache; the df-cap is a broadcast anti-join
-    # over cache reads (single scan of each side, same policy as
-    # _minhash_band_candidates).
-    # spread_key not used: both sides persist below, see
-    # _minhash_band_candidates (an unfinalized cached plan's partitioning
-    # reads as Unknown, so the signature groupBys re-shuffle anyway).
-    raw_new = shingles(new_docs, n=n, id_col=id_col, text_col=text_col)
-    raw_old = shingles(corpus, n=n, id_col=id_col, text_col=text_col)
-    if persist:  # see ngram_jaccard_pairs: streaming callers pass False
-        raw_new = scoped_persist(raw_new)
-        raw_old = scoped_persist(raw_old)
-    sh_new = (
-        _drop_hot_keys(raw_new, ["shingle"], max_shingle_df) if max_shingle_df else raw_new
-    )
-    sh_old = (
-        _drop_hot_keys(raw_old, ["shingle"], max_shingle_df) if max_shingle_df else raw_old
-    )
-
-    def banded(side: DataFrame, capped_sh: DataFrame, alias: str) -> DataFrame:
-        sig = minhash_signatures(
-            side, num_hashes=num_hashes, n=n, id_col=id_col,
-            text_col=text_col, shingle_df=capped_sh,
+    (new_sig, new_stack), (old_sig, old_stack) = (
+        _minhash_band_side(
+            side, num_hashes, bands, n, id_col, text_col, max_shingle_df, "xxhash64"
         )
-        return sig.select(F.col(id_col).alias(alias), *_band_keys(bands, rows_per_band)).select(
-            F.col(alias),
-            F.posexplode(F.array(*[F.col(f"band_{b}") for b in range(bands)])).alias(
-                "band_idx", "band_hash"
-            ),
-        )
-
-    candidates = (
-        banded(new_docs, sh_new, "new_id")
-        .join(banded(corpus, sh_old, "old_id"), ["band_idx", "band_hash"])
-        .select("new_id", "old_id")
-        .distinct()
+        for side in (new_docs, corpus)
     )
-    inter = (
-        candidates.join(sh_new.select(F.col(id_col).alias("new_id"), "shingle"), "new_id")
-        .join(sh_old.select(F.col(id_col).alias("old_id"), "shingle"), ["old_id", "shingle"])
-        .groupBy("new_id", "old_id")
-        .agg(F.count("*").alias("inter"))
-    )
-    sz_new = sh_new.groupBy(id_col).agg(F.count("*").alias("n_new")).select(
-        F.col(id_col).alias("new_id"), "n_new"
-    )
-    sz_old = sh_old.groupBy(id_col).agg(F.count("*").alias("n_old")).select(
-        F.col(id_col).alias("old_id"), "n_old"
-    )
+    candidates = _band_join(new_stack, old_stack, id_col)
     dups = (
-        inter.join(sz_new, "new_id")
-        .join(sz_old, "old_id")
-        .filter(
-            F.round(
-                F.col("inter") / (F.col("n_new") + F.col("n_old") - F.col("inter")), 6
-            )
-            >= threshold
-        )
-        .select(F.col("new_id").alias(id_col))
+        _array_jaccard_pairs(candidates, new_sig, old_sig, id_col, threshold)
+        .select(F.col("doc_a").alias(id_col))
         .distinct()
     )
     return new_docs.join(dups, id_col, "left_anti")
@@ -1363,31 +1362,21 @@ def minhash_band_table(
 ) -> DataFrame:
     """The maintained dedup INDEX for incremental ingest: per document,
     the full minhash signature (as an array) plus the band hashes, in
-    band-exploded long form (id, band_idx, band_hash, sig).
+    band-exploded long form (id, sig, band_idx, band_hash); the banding
+    contract is :func:`_rows_per_band`'s.
 
     This is what production near-dup systems persist between ingests —
     O(docs × bands) short rows, NOT the shingle stream — so each new
     batch pays O(new + collisions) instead of re-deriving signatures
     over the whole history (see incremental_neardup_filter_sig)."""
-    if num_hashes % bands:
-        raise ValueError(f"num_hashes={num_hashes} not divisible by bands={bands}")
-    rows_per_band = num_hashes // bands
+    rows_per_band = _rows_per_band(num_hashes, bands)
     sig = minhash_signatures(
         docs, num_hashes=num_hashes, n=n, id_col=id_col,
         text_col=text_col, max_shingle_df=max_shingle_df,
         hash_family=hash_family,
     )
     sig_arr = F.array(*[F.col(f"mh_{i}") for i in range(num_hashes)])
-    banded = sig.select(
-        F.col(id_col), sig_arr.alias("sig"), *_band_keys(bands, rows_per_band, hash_family)
-    )
-    return banded.select(
-        F.col(id_col),
-        "sig",
-        F.posexplode(F.array(*[F.col(f"band_{b}") for b in range(bands)])).alias(
-            "band_idx", "band_hash"
-        ),
-    )
+    return _band_stack(sig, id_col, bands, rows_per_band, hash_family, sig_arr.alias("sig"))
 
 
 def incremental_neardup_filter_sig(

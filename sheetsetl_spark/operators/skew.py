@@ -140,34 +140,11 @@ def widen_to_cores(df, min_input_bytes: int = 2 << 20, files=None, fanout: float
     cap scan parallelism. Only the gate changes: a genuinely large
     corpus still passes through unwidened once its scan is wide.
     """
-    spark = df.sparkSession
-    want = spark.sparkContext.defaultParallelism
-    if files is None:
-        try:
-            files = df.inputFiles()
-        except Exception:
-            files = []
-    sizes = _local_file_sizes(files) if files else None
-    if sizes is not None and _has_explicit_repartition(df):
-        sizes = None
-    if sizes is not None:
-        total = sum(sizes)
-        if total * fanout < min_input_bytes:
-            return df
-        # Scan-task estimate without touching df.rdd: each file yields
-        # ~ceil(size / maxPartitionBytes) splits (Spark may produce more
-        # when bytes-per-core shrinks maxSplitBytes below the conf value,
-        # i.e. only on inputs already near full width — a skipped widen
-        # there is harmless, and repartition(want) never narrows below
-        # cluster width anyway).
-        max_split = _parse_bytes_conf(
-            spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")
-        )
-        est_splits = sum(-(-s // max_split) for s in sizes)
-        if est_splits >= want:
-            return df
-        return df.repartition(want)
-    if df.rdd.getNumPartitions() >= want:
+    want = df.sparkSession.sparkContext.defaultParallelism
+    total, splits = _scan_splits(df, files)
+    if total is not None and total * fanout < min_input_bytes:
+        return df
+    if splits >= want:
         return df
     return df.repartition(want)
 
@@ -195,25 +172,35 @@ def spread_by_key(df, cols: list[str]):
     be high-cardinality (one doc id per row); a low-cardinality key
     would funnel the data into |distinct| effective groups.
     """
-    spark = df.sparkSession
-    want = spark.sparkContext.defaultParallelism
-    try:
-        files = df.inputFiles()
-    except Exception:
-        files = []
-    sizes = _local_file_sizes(files) if files else None
-    if sizes is not None and _has_explicit_repartition(df):
-        sizes = None
-    if sizes is not None:
-        max_split = _parse_bytes_conf(
-            spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")
-        )
-        n = max(want, sum(-(-s // max_split) for s in sizes))
-    else:
-        n = max(want, df.rdd.getNumPartitions())
-    from pyspark.sql import functions as F
-
+    _, splits = _scan_splits(df)
+    n = max(df.sparkSession.sparkContext.defaultParallelism, splits)
     return df.repartition(n, *[F.col(c) for c in cols])
+
+
+def _scan_splits(df, files=None) -> tuple[int | None, int]:
+    """(input bytes, scan splits) of ``df`` — the split estimator of
+    :func:`widen_to_cores` and :func:`spread_by_key`.
+
+    When the frame's lineage reaches readable local files (``files``
+    overrides ``df.inputFiles()``) and its logical plan carries no
+    explicit repartition, both come from the file sizes: each file
+    yields ~ceil(size / maxPartitionBytes) splits, estimated without
+    touching ``df.rdd`` (Spark may produce more when bytes-per-core
+    shrinks maxSplitBytes below the conf value, i.e. only on inputs
+    already near full width). Otherwise the bytes are None and the
+    splits come from the partition probe ``df.rdd.getNumPartitions()``."""
+    if files is None:
+        try:
+            files = df.inputFiles()
+        except Exception:
+            files = []
+    sizes = _local_file_sizes(files) if files else None
+    if sizes is None or _has_explicit_repartition(df):
+        return None, df.rdd.getNumPartitions()
+    max_split = _parse_bytes_conf(
+        df.sparkSession.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")
+    )
+    return sum(sizes), sum(-(-s // max_split) for s in sizes)
 
 
 def _has_explicit_repartition(df) -> bool:
@@ -270,9 +257,9 @@ def _parse_bytes_conf(value: str) -> int:
         import warnings
 
         warnings.warn(
-            f"widen_to_cores: unparseable spark.sql.files.maxPartitionBytes "
-            f"{value!r}; assuming the 128 MB default for the split estimate",
-            stacklevel=3,
+            f"unparseable spark.sql.files.maxPartitionBytes {value!r}; "
+            f"assuming the 128 MB default for the split estimate",
+            stacklevel=4,
         )
         return 128 << 20
     return int(m.group(1)) * mult

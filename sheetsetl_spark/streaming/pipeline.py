@@ -29,6 +29,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from sheetsetl_spark.cache import cache_scope
+from sheetsetl_spark.operators.dedup import (
+    _rows_per_band,
+    incremental_neardup_filter,
+    incremental_neardup_filter_sig,
+    minhash_band_table,
+    ngram_jaccard_pairs,
+)
 from sheetsetl_spark.sinks.base import Sink
 
 #: events schema after the catalog's ns->us conversion (FIXTURES.md).
@@ -334,6 +342,22 @@ def _write_indexed_batch(
         _write_batch(index_fn(back), batch_id, index_dir)
 
 
+def _drop_intra_batch_dups(
+    batch_df: DataFrame, threshold: float, n: int, id_col: str, max_shingle_df: int | None
+) -> DataFrame:
+    """``batch_df`` without the larger-id member of every pair inside it
+    whose exact word-n-gram Jaccard reaches ``threshold``: smaller id
+    wins (the priority rule of semantic_dedup). The history filters never
+    pair two new documents, so the text-dedup ingests drop new-vs-new
+    near-dups here; the batch is small, so the shingle join is cheap."""
+    intra = ngram_jaccard_pairs(
+        batch_df, threshold=threshold, n=n, id_col=id_col, max_shingle_df=max_shingle_df
+    )
+    return batch_df.join(
+        intra.select(F.col("doc_b").alias(id_col)).distinct(), id_col, "left_anti"
+    )
+
+
 class DedupIngestForeachBatch:
     """Streaming corpus ingest with incremental near-dup filtering — the
     daily-crawl loop as a foreachBatch sink: every micro-batch is deduped
@@ -342,12 +366,15 @@ class DedupIngestForeachBatch:
     band join: history↔history pairs are never generated), survivors are
     appended to the history store, and the history feeds the next
     batch's filter. Replays follow the batch-store contract
-    (:func:`_write_batch`).
+    (:func:`_write_batch`). The banding (``bands`` must divide
+    ``num_hashes``) is checked at construction, before anything is
+    written.
 
-    Cache safety: the filters run with persist=False — a long-running
-    stream invoking a persisting operator once per micro-batch would pin
-    an ever-growing set of shingle-stream caches; micro-batches are small
-    enough that recomputation is the right trade.
+    Cache safety: each call runs inside ``cache.cache_scope()``. The
+    filters persist their shingle streams and signature frames, so the
+    batch and its history are each shingled once, and every entry is
+    unpersisted when the call returns — a long-running stream never
+    pins caches from earlier micro-batches.
 
     At scale the history side's signatures would be a maintained table;
     here they derive from the history parquet per batch — the same
@@ -363,6 +390,7 @@ class DedupIngestForeachBatch:
         max_shingle_df: int | None = 1000,
         id_col: str = "doc_id",
     ):
+        _rows_per_band(num_hashes, bands)
         self.history_dir = history_dir
         self.threshold = threshold
         self.num_hashes = num_hashes
@@ -373,44 +401,25 @@ class DedupIngestForeachBatch:
         self.batches_seen: list[int] = []
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        from sheetsetl_spark.operators.dedup import (
-            incremental_neardup_filter,
-            ngram_jaccard_pairs,
-        )
-
         self.batches_seen.append(batch_id)
-
-        # batch-internal near-dups: smaller id wins (same priority rule as
-        # semantic_dedup); new-vs-new pairs are NOT generated by the
-        # asymmetric history filter, so they are handled here
-        intra = ngram_jaccard_pairs(
-            batch_df,
-            threshold=self.threshold,
-            n=self.n,
-            id_col=self.id_col,
-            max_shingle_df=self.max_shingle_df,
-            persist=False,
-        )
-        new_docs = batch_df.join(
-            intra.select(F.col("doc_b").alias(self.id_col)).distinct(),
-            self.id_col,
-            "left_anti",
-        )
-
-        history = _read_store(batch_df.sparkSession, self.history_dir, batch_id)
-        if history is not None:
-            new_docs = incremental_neardup_filter(
-                new_docs,
-                history,
-                threshold=self.threshold,
-                num_hashes=self.num_hashes,
-                bands=self.bands,
-                n=self.n,
-                id_col=self.id_col,
-                max_shingle_df=self.max_shingle_df,
-                persist=False,
+        with cache_scope():
+            new_docs = _drop_intra_batch_dups(
+                batch_df, self.threshold, self.n, self.id_col, self.max_shingle_df
             )
-        _write_batch(new_docs, batch_id, self.history_dir)
+            history = _read_store(batch_df.sparkSession, self.history_dir, batch_id)
+            if history is not None:
+                new_docs = incremental_neardup_filter(
+                    new_docs,
+                    history,
+                    threshold=self.threshold,
+                    num_hashes=self.num_hashes,
+                    bands=self.bands,
+                    n=self.n,
+                    id_col=self.id_col,
+                    max_shingle_df=self.max_shingle_df,
+                )
+            _write_batch(new_docs, batch_id, self.history_dir)
+
 
 class SignatureDedupIngestForeachBatch:
     """The index-maintained variant of :class:`DedupIngestForeachBatch`:
@@ -419,7 +428,8 @@ class SignatureDedupIngestForeachBatch:
     by estimated Jaccard against that index alone — per-ingest cost is
     O(new + collisions) with NO rescan of history text, the shape that
     holds when history is 100 TB and the daily batch is a fraction of a
-    percent of it.
+    percent of it. Banding is checked at construction and each call runs
+    inside ``cache.cache_scope()``, as in :class:`DedupIngestForeachBatch`.
 
     Explicitly approximate (minhash agreement estimates Jaccard to
     ~sqrt(J(1-J)/num_hashes)); use DedupIngestForeachBatch when exact
@@ -447,6 +457,7 @@ class SignatureDedupIngestForeachBatch:
         id_col: str = "doc_id",
         max_bucket_size: int | None = None,
     ):
+        _rows_per_band(num_hashes, bands)
         self.history_dir = history_dir
         self.index_dir = index_dir
         self.threshold = threshold
@@ -459,43 +470,28 @@ class SignatureDedupIngestForeachBatch:
         self.batches_seen: list[int] = []
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        from sheetsetl_spark.operators.dedup import (
-            incremental_neardup_filter_sig,
-            minhash_band_table,
-            ngram_jaccard_pairs,
-        )
-
         self.batches_seen.append(batch_id)
-
-        # intra-batch near-dups: smaller id wins (exact Jaccard — the
-        # batch is small, so the shingle join is cheap)
-        intra = ngram_jaccard_pairs(
-            batch_df, threshold=self.threshold, n=self.n, id_col=self.id_col,
-            max_shingle_df=self.max_shingle_df, persist=False,
-        )
-        new_docs = batch_df.join(
-            intra.select(F.col("doc_b").alias(self.id_col)).distinct(),
-            self.id_col, "left_anti",
-        )
-
-        index = _read_store(batch_df.sparkSession, self.index_dir, batch_id)
-        if index is not None:
-            new_docs = incremental_neardup_filter_sig(
-                new_docs, index,
-                threshold=self.threshold, num_hashes=self.num_hashes,
-                bands=self.bands, n=self.n, id_col=self.id_col,
-                max_shingle_df=self.max_shingle_df,
-                max_bucket_size=self.max_bucket_size,
+        with cache_scope():
+            new_docs = _drop_intra_batch_dups(
+                batch_df, self.threshold, self.n, self.id_col, self.max_shingle_df
             )
-
-        _write_indexed_batch(
-            new_docs, batch_id, self.history_dir, self.index_dir,
-            lambda survivors: minhash_band_table(
-                survivors, num_hashes=self.num_hashes, bands=self.bands,
-                n=self.n, id_col=self.id_col,
-                max_shingle_df=self.max_shingle_df,
-            ),
-        )
+            index = _read_store(batch_df.sparkSession, self.index_dir, batch_id)
+            if index is not None:
+                new_docs = incremental_neardup_filter_sig(
+                    new_docs, index,
+                    threshold=self.threshold, num_hashes=self.num_hashes,
+                    bands=self.bands, n=self.n, id_col=self.id_col,
+                    max_shingle_df=self.max_shingle_df,
+                    max_bucket_size=self.max_bucket_size,
+                )
+            _write_indexed_batch(
+                new_docs, batch_id, self.history_dir, self.index_dir,
+                lambda survivors: minhash_band_table(
+                    survivors, num_hashes=self.num_hashes, bands=self.bands,
+                    n=self.n, id_col=self.id_col,
+                    max_shingle_df=self.max_shingle_df,
+                ),
+            )
 
 
 class EmbeddingDedupIngestForeachBatch:

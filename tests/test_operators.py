@@ -3,6 +3,8 @@ plumbing, simhash shape, LSH determinism."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -815,17 +817,23 @@ def test_minhash_lsh_reuses_cached_shingle_stream(spark):
         ("minhash_lsh_pairs", {"threshold": 0.5, "num_hashes": 0, "bands": 1}, "bands"),
         ("minhash_estimate_audit", {"threshold": 0.5, "bands": 0}, "bands"),
         ("minhash_estimate_audit", {"threshold": 0.5, "bands": -4}, "bands"),
+        ("incremental_neardup_filter", {"num_hashes": 30, "bands": 8}, "bands"),
+        ("incremental_neardup_filter", {"bands": 0}, "bands"),
+        ("minhash_band_table", {"bands": 0}, "bands"),
     ],
 )
 def test_similarity_joins_reject_degenerate_parameters(spark, op, kwargs, match):
     """Parameters outside each join's contract raise ValueError when the
     operator is called, instead of silently dropping pairs, scoring
-    every pair 1.0, or failing later inside Spark."""
+    every pair 1.0, banding only part of the signature, or failing later
+    inside Spark."""
     docs = spark.createDataFrame(
         [(0, "a b c d"), (1, "a b c e"), (2, "x y z w")], "doc_id long, text string"
     )
+    # the incremental filter takes the history corpus as a second frame
+    args = (docs, docs) if op == "incremental_neardup_filter" else (docs,)
     with pytest.raises(ValueError, match=match):
-        getattr(dedup, op)(docs, **kwargs)
+        getattr(dedup, op)(*args, **kwargs)
 
 
 def test_gopher_flags_zero_shuffle_and_rules(spark):
@@ -1623,6 +1631,40 @@ def test_widen_to_cores_no_lineage_falls_back_to_partition_probe(spark):
     assert widen_to_cores(narrow).rdd.getNumPartitions() == want
     wide = spark.range(100).repartition(want)
     assert widen_to_cores(wide) is wide
+
+
+def test_spread_by_key_sizes_from_file_split_estimate(spark, tmp_path):
+    """spread_by_key reads the same file-size split estimate as
+    widen_to_cores, without touching df.rdd: with a small
+    maxPartitionBytes the estimate exceeds the cluster width and sets the
+    partition count; a tiny input spreads to exactly the cluster width."""
+    from pyspark.sql import DataFrame
+
+    from sheetsetl_spark.operators.skew import spread_by_key
+
+    want = spark.sparkContext.defaultParallelism
+    path = str(tmp_path / "one.parquet")
+    spark.range(20000).coalesce(1).write.parquet(path)
+    df = spark.read.parquet(path)
+    (size,) = [os.path.getsize(f.removeprefix("file:")) for f in df.inputFiles()]
+    split = max(1, size // (want * 3))
+    est = -(-size // split)
+
+    def _boom(self):
+        raise AssertionError("spread_by_key touched df.rdd on the file path")
+
+    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    try:
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(DataFrame, "rdd", property(_boom))
+            tiny = spread_by_key(df, ["id"])
+            spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
+            wide = spread_by_key(df, ["id"])
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+    assert est > want
+    assert tiny.rdd.getNumPartitions() == want
+    assert wide.rdd.getNumPartitions() == est
 
 
 def test_parse_bytes_conf_units():

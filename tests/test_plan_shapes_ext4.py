@@ -218,19 +218,21 @@ def test_edit_distance_join_equi_joins_only(spark):
 
 
 def test_minhash_estimate_verify_intersects_arrays(spark):
-    """c107: the exact Jaccard intersects the two per-document shingle
-    arrays of the persisted signature frame — no join keyed on shingle
-    explodes |cand| x doc_len rows. The only shingle-keyed join left is
-    the df cap's broadcast anti-join."""
-    df = QUERIES["c107_minhash_jaccard_estimate"](spark, SF_SMALL)
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    shingle_joins = [
-        ln.strip()
-        for ln in plan.splitlines()
-        if re.search(r"Join \w+, .*shingle#", ln) and "Join LeftAnti" not in ln
-    ]
-    assert not shingle_joins, shingle_joins
-    assert "array_intersect" in plan, plan
+    """c107 and c28 (the incremental new-vs-history filter): the exact
+    Jaccard intersects the two per-document shingle arrays of the
+    persisted signature frames — no join keyed on shingle explodes
+    |cand| x doc_len rows. The only shingle-keyed joins left are the df
+    caps' broadcast anti-joins."""
+    for name in ("c107_minhash_jaccard_estimate", "c28_incremental_neardup"):
+        df = QUERIES[name](spark, SF_SMALL)
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        shingle_joins = [
+            ln.strip()
+            for ln in plan.splitlines()
+            if re.search(r"Join \w+, .*shingle#", ln) and "Join LeftAnti" not in ln
+        ]
+        assert not shingle_joins, (name, shingle_joins)
+        assert "array_intersect" in plan, (name, plan)
 
 
 def test_substring_decontamination_broadcasts_probes(spark):

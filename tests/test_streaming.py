@@ -254,6 +254,56 @@ def test_dedup_ingest_drops_intra_batch_near_dups(spark, tmp_path):
     got = {r["doc_id"] for r in spark.read.parquet(hist).collect()}
     assert got == {1, 9}
 
+@pytest.mark.parametrize("banding", [{"bands": 0}, {"num_hashes": 30, "bands": 8}])
+def test_dedup_ingests_reject_bad_banding_at_construction(tmp_path, banding):
+    """A banding the MinHash core refuses (bands < 1, or bands not
+    dividing num_hashes) fails when the ingest is built, before any
+    batch is written: neither store directory is created."""
+    from sheetsetl_spark.streaming import (
+        DedupIngestForeachBatch,
+        SignatureDedupIngestForeachBatch,
+    )
+
+    hist, idx = str(tmp_path / "history"), str(tmp_path / "index")
+    with pytest.raises(ValueError, match="bands"):
+        DedupIngestForeachBatch(hist, **banding)
+    with pytest.raises(ValueError, match="bands"):
+        SignatureDedupIngestForeachBatch(hist, idx, **banding)
+    assert not (tmp_path / "history").exists() and not (tmp_path / "index").exists()
+
+
+def test_dedup_ingests_leave_no_cache_entries(spark, tmp_path):
+    """The text-dedup ingests persist shingle streams and signature
+    frames inside each call and unpersist them when it returns: after
+    every call, a replay included, the session's cache manager is
+    empty, so a long-running stream pins nothing across micro-batches."""
+    from sheetsetl_spark.streaming import (
+        DedupIngestForeachBatch,
+        SignatureDedupIngestForeachBatch,
+    )
+
+    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    batches = [
+        spark.createDataFrame([(1, base), (2, "one two three four five six")],
+                              "doc_id long, text string"),
+        spark.createDataFrame([(3, base + " extra"), (4, "seven eight nine ten eleven")],
+                              "doc_id long, text string"),
+    ]
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    ingests = [
+        DedupIngestForeachBatch(str(tmp_path / "h")),
+        SignatureDedupIngestForeachBatch(str(tmp_path / "sh"), str(tmp_path / "si")),
+    ]
+    for ingest in ingests:
+        for batch_id in (0, 1, 1):
+            ingest(batches[batch_id], batch_id)
+            assert cache_manager.isEmpty(), (type(ingest).__name__, batch_id)
+    for hist in ("h", "sh"):
+        got = {r["doc_id"] for r in spark.read.parquet(str(tmp_path / hist)).collect()}
+        assert got == {1, 2, 4}, (hist, got)
+
+
 def test_signature_dedup_ingest_maintains_index(spark, tmp_path):
     """Index-maintained ingest: cross-batch near-dups are dropped using
     ONLY the stored band table (no history text rescan); the index grows
