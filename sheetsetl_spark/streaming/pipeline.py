@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from sheetsetl_spark.cache import cache_scope
+from sheetsetl_spark.cache import cache_scope, scoped_persist
 from sheetsetl_spark.operators.dedup import (
     _rows_per_band,
     incremental_neardup_filter,
@@ -349,12 +349,17 @@ def _drop_intra_batch_dups(
     whose exact word-n-gram Jaccard reaches ``threshold``: smaller id
     wins (the priority rule of semantic_dedup). The history filters never
     pair two new documents, so the text-dedup ingests drop new-vs-new
-    near-dups here; the batch is small, so the shingle join is cheap."""
+    near-dups here; the batch is small, so the shingle join is cheap.
+
+    The survivors are persisted (released by the caller's
+    ``cache_scope()``): the history filter's shingling, its widen probe,
+    its final anti-join and the batch write all read them, and without
+    the cache each of those re-runs the shingle self-join above."""
     intra = ngram_jaccard_pairs(
         batch_df, threshold=threshold, n=n, id_col=id_col, max_shingle_df=max_shingle_df
     )
-    return batch_df.join(
-        intra.select(F.col("doc_b").alias(id_col)).distinct(), id_col, "left_anti"
+    return scoped_persist(
+        batch_df.join(intra.select(F.col("doc_b").alias(id_col)).distinct(), id_col, "left_anti")
     )
 
 
@@ -371,10 +376,11 @@ class DedupIngestForeachBatch:
     written.
 
     Cache safety: each call runs inside ``cache.cache_scope()``. The
-    filters persist their shingle streams and signature frames, so the
-    batch and its history are each shingled once, and every entry is
-    unpersisted when the call returns — a long-running stream never
-    pins caches from earlier micro-batches.
+    intra-batch survivors, and the filters' shingle streams and
+    signature frames, are persisted, so the batch and its history are
+    each shingled once, and every entry is unpersisted when the call
+    returns — a long-running stream never pins caches from earlier
+    micro-batches.
 
     At scale the history side's signatures would be a maintained table;
     here they derive from the history parquet per batch — the same
