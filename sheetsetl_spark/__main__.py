@@ -35,7 +35,14 @@ def main(argv: list[str] | None = None) -> int:
     run.add_argument("--dialect", choices=("spark", "mysql"), default="mysql")
     run.add_argument("--sink", choices=("csv", "parquet", "json"), default="csv")
     run.add_argument("--concurrency", type=int, default=1)
-    run.add_argument("--cell-limit", type=int, default=None)
+    run.add_argument(
+        "--cell-limit",
+        type=int,
+        default=None,
+        help="reject results of (rows + 1) * cols >= N cells (default 2,000,000, "
+        "the Sheets cap); also bounds the rows collected to the driver per "
+        "file, for every sink",
+    )
     run.add_argument(
         "--ci-collation",
         action="store_true",
@@ -92,17 +99,21 @@ def main(argv: list[str] | None = None) -> int:
         "parquet": ParquetDirSink,
         "json": JsonDirSink,
     }[args.sink](args.out_dir)
-    report = SqlFolderPipeline(
-        spark,
-        args.query_dir,
-        sink,
-        cell_limit=args.cell_limit or DEFAULT_CELL_LIMIT,
-        setup=lambda s: register_views(
-            s, args.tables, case_insensitive=args.ci_collation
-        ),
-        max_concurrency=args.concurrency,
-        dialect=args.dialect,
-    ).run()
+    try:
+        report = SqlFolderPipeline(
+            spark,
+            args.query_dir,
+            sink,
+            cell_limit=DEFAULT_CELL_LIMIT if args.cell_limit is None else args.cell_limit,
+            setup=lambda s: register_views(
+                s, args.tables, case_insensitive=args.ci_collation
+            ),
+            max_concurrency=args.concurrency,
+            dialect=args.dialect,
+        ).run()
+    finally:
+        if owned:
+            spark.stop()
     ok = True
     for r in report.results:
         line = f"{r.name}: {r.status}"
@@ -114,8 +125,6 @@ def main(argv: list[str] | None = None) -> int:
             line += f" error={r.error}"
         print(line)
         ok = ok and r.status == "ok"
-    if owned:
-        spark.stop()
     return 0 if ok else 1
 
 

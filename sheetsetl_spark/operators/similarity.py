@@ -835,20 +835,49 @@ def cosine_topk_pq(
     import numpy as np
 
     seeds = [int(s) for s in seed_ids]
-    small_rows = (
-        _normalize(
-            embeddings.select(
-                F.col(id_col).alias("vid"),
-                F.col(vec_col).cast("array<double>").alias("v"),
-            ).filter(F.col("vid").isin(seeds + [int(query_vec_id)]))
+    query_vec_id = int(query_vec_id)
+    if m < 1 or not 1 <= len(seeds) <= 100:
+        # the packed argmin key holds the centroid index in two digits
+        raise ValueError(
+            f"cosine_topk_pq: need m >= 1 and 1..100 seeds, got m={m}, {len(seeds)} seeds"
         )
-        .select("vid", "u")
+    # The seed/query norm is _checked_norm's fold without its raise: a
+    # degenerate row yields n = NULL and is refused below as ValueError,
+    # before any corpus pass (no divide by zero under ANSI either).
+    small_rows = (
+        embeddings.select(
+            F.col(id_col).alias("vid"),
+            F.col(vec_col).cast("array<double>").alias("v"),
+        )
+        .filter(F.col("vid").isin(seeds + [query_vec_id]))
+        .withColumn(
+            "n",
+            F.expr(
+                "aggregate(zip_with(v, v, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x, "
+                "s -> CASE WHEN s > 0 THEN sqrt(s) END)"
+            ),
+        )
+        .select("vid", "n", F.transform(F.col("v"), lambda x: x / F.col("n")).alias("u"))
         .collect()
     )
     u_by_id = {r["vid"]: r["u"] for r in small_rows}
-    qu_vec = u_by_id[int(query_vec_id)]
+    missing = sorted({*seeds, query_vec_id} - u_by_id.keys())
+    if missing:
+        raise ValueError(f"cosine_topk_pq: ids {missing} are not in the embeddings")
+    if any(r["n"] is None for r in small_rows):
+        raise ValueError(
+            "cosine operators: NULL or zero-norm vector has no "
+            "direction; filter such rows out first"
+        )
+    qu_vec = u_by_id[query_vec_id]
+    dim = len(qu_vec)
+    if dim % m or any(len(u) != dim for u in u_by_id.values()):
+        raise ValueError(
+            f"cosine_topk_pq: seed and query vectors must share one length "
+            f"divisible by m={m}, got lengths {sorted({len(u) for u in u_by_id.values()})}"
+        )
 
-    sub_dim = 64 // m
+    sub_dim = dim // m
     n_codes = len(seeds)
     # Per-subspace scoring matrices, shipped to the workers via the
     # mapInArrow closure (KBs — never in the plan). CBT[s][d][j] is

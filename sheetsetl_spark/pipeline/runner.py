@@ -6,13 +6,17 @@ Control flow mirrors /root/reference/src/loader.py:223-255 one-to-one:
     -> execute each (cursor.execute at :231  ==>  spark.sql here)
     -> output-size guard ((rows+1)*cols >= 2M skips, :241-253)
     -> upsert into the sink by name (filename minus '.sql', :152)
-  with per-file error isolation: a syntax error (:232-234) or a sink
-  error (:184-186) logs and skips that file, never aborts the run.
+  with per-file error isolation: a syntax or runtime error (:232-234) or
+  a sink error (:184-186) logs and skips that file, never aborts the run.
 
-What changes Spark-side: the execute->spool->guard steps become ONE
-Catalyst-planned job per query (no client-side row loop, no CSV spool),
-and the sink writes distributed unless the backend is inherently
-driver-side (Sheets).
+What changes Spark-side: the execute->spool->guard steps become one
+bounded collect per query. The guard collects at most one row past the
+largest count the cell limit allows, as Arrow, and rejects on the same
+rule; an accepted result is handed to the sink as a frame over those
+collected rows, so every sink publishes exactly what the guard checked
+and no sink runs the query again. Every output is capped below the cell
+limit, so this driver-side materialization is bounded, as the
+reference's spool is.
 """
 
 from __future__ import annotations
@@ -91,9 +95,14 @@ class SqlFolderPipeline:
     MySQL->Spark translator first (LIMIT off,cnt / DATE_FORMAT patterns /
     GROUP_CONCAT), so the reference's analyst files run unmodified.
 
+    ``cell_limit`` (>= 1) is the reference's 2M-cell sheet cap. It also
+    bounds the rows each file collects to the driver, for every sink: a
+    file's result is collected once by the guard and published from there.
+
     ``validate`` (optional) is a ``(name, df) -> None`` hook called after
-    the cell guard and BEFORE the sink — raise :class:`ValidationFailed`
-    (or return normally) to gate publishing on data-quality contracts
+    the cell guard, on the collected result, and BEFORE the sink — raise
+    :class:`ValidationFailed` (or return normally) to gate publishing on
+    data-quality contracts
     (e.g. ``operators/quality_checks.py::check_constraints``); a failure
     records ``validation_error`` and skips only that file. The reference
     publishes whatever MySQL returns (loader.py:238-246) — this is the
@@ -121,6 +130,8 @@ class SqlFolderPipeline:
     ):
         if dialect not in ("spark", "mysql"):
             raise ValueError(f"dialect must be spark|mysql, got {dialect!r}")
+        if cell_limit < 1:
+            raise ValueError(f"cell_limit must be >= 1, got {cell_limit!r}")
         self.spark = spark
         self.source_dir = source_dir
         self.sink = sink
@@ -171,10 +182,16 @@ class SqlFolderPipeline:
             logger.exception("SQL error in %s", qf.name)
             return QueryResult(qf.name, "sql_error", error=str(exc))
         try:
-            rows = cell_count_guard(df, qf.name, self.cell_limit)
+            # the only execution of the query; sinks get the collected rows
+            table = cell_count_guard(df, qf.name, self.cell_limit)
         except CellLimitExceeded as exc:  # loader.py:250-253
             logger.error("%s over the %d-cell limit, skipping", qf.name, self.cell_limit)
             return QueryResult(qf.name, "cell_limit", error=str(exc))
+        except Exception as exc:  # runtime error (raise_error, ANSI cast...) -> skip file
+            logger.exception("SQL error in %s", qf.name)
+            return QueryResult(qf.name, "sql_error", error=str(exc))
+        rows = table.num_rows
+        df = self.spark.createDataFrame(table, schema=df.schema)
         if self.validate is not None:
             try:
                 self.validate(qf.name, df)

@@ -8,9 +8,12 @@ moves on; our pipeline catches CellLimitExceeded and does the same).
 
 from __future__ import annotations
 
-from typing import Protocol, runtime_checkable
+from typing import TYPE_CHECKING, Protocol, runtime_checkable
 
 from pyspark.sql import DataFrame
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 #: Google Sheets hard limit the reference enforces (loader.py:250, README.md:60-61).
 DEFAULT_CELL_LIMIT = 2_000_000
@@ -22,19 +25,29 @@ class CellLimitExceeded(Exception):
         super().__init__(f"{name}: {cells} cells >= limit {limit}")
 
 
-def cell_count_guard(df: DataFrame, name: str, limit: int = DEFAULT_CELL_LIMIT) -> int:
-    """Count output cells ((rows + header) * cols, loader.py:241-246) and
-    raise if the sink limit is hit. Returns the row count.
+def cell_count_guard(df: DataFrame, name: str, limit: int = DEFAULT_CELL_LIMIT) -> pa.Table:
+    """Collect the result once, bounded by the cell limit, and raise if
+    it hits the limit ((rows + header) * cols >= limit, loader.py:241-253).
+    Returns the collected rows as an Arrow table.
 
-    The count() here is a deliberate pre-sink action — one cheap
-    aggregate job (Catalyst collapses it to a metadata/count-star plan
-    where possible) instead of the reference's count-while-spooling.
+    ``r_max = ceil(limit / cols) - 2`` is the largest row count that
+    passes, so collecting ``r_max + 1`` rows decides the rule without a
+    separate count: the reference likewise counts while it spools. A
+    rejected result stops after ``r_max + 1`` rows, and
+    ``CellLimitExceeded.cells`` is then the first failing count, not
+    the full result's. Every accepted result is below the limit, so the
+    collect is one bounded driver-side materialization and sinks
+    publish exactly the rows checked here without re-running the query.
     """
-    rows = df.count()
-    cells = (rows + 1) * len(df.columns)
+    cols = len(df.columns)
+    if cols == 0:
+        raise ValueError(f"{name}: the query returns no columns")
+    r_max = -(-limit // cols) - 2
+    table = df.limit(max(r_max + 1, 0)).toArrow()
+    cells = (table.num_rows + 1) * cols
     if cells >= limit:
         raise CellLimitExceeded(name, cells, limit)
-    return rows
+    return table
 
 
 @runtime_checkable

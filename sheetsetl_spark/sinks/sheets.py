@@ -79,7 +79,9 @@ class GoogleSheetsSink:
 
         Sheets is inherently a small-output sink (2M-cell cap upstream of
         here), so a driver-side collect is correct; Arrow keeps the
-        transfer columnar. Guarded against misuse on unguarded inputs.
+        transfer columnar. Under ``SqlFolderPipeline`` the frame holds the
+        rows the cell guard collected, so this is a local read. Guarded
+        against misuse on unguarded inputs.
         """
         pdf = df.limit(self.max_driver_rows + 1).toPandas()
         if len(pdf) > self.max_driver_rows:

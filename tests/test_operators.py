@@ -1389,6 +1389,44 @@ def test_winnowing_shared_run_guarantee(spark):
     assert h1 & h2
 
 
+def test_pq_degenerate_inputs_raise_value_error(spark):
+    """c55 refuses degenerate inputs with ValueError before any corpus
+    pass: unknown query/seed ids, NULL or zero-norm seed/query vectors,
+    and a vector length m does not divide."""
+    emb = spark.createDataFrame(
+        [(i, [float(i + 1), 1.0, -1.0, 2.0, 0.5, 3.0]) for i in range(6)]
+        + [(6, [0.0] * 6), (7, None)],
+        "vec_id long, embedding array<double>",
+    )
+    cases = [
+        ((99, [1, 2]), {}, "not in the embeddings"),  # query id
+        ((0, [1, 77]), {}, "not in the embeddings"),  # seed id
+        ((0, [1, 6]), {}, "zero-norm"),  # zero seed
+        ((0, [1, 7]), {}, "zero-norm"),  # NULL seed
+        ((6, [1, 2]), {}, "zero-norm"),  # zero query
+        ((7, [1, 2]), {}, "zero-norm"),  # NULL query
+        ((0, [1, 2]), {"m": 4}, "divisible by m=4"),
+        ((0, [1, 2]), {"m": 0}, "m >= 1"),
+        ((0, []), {}, "1..100 seeds"),
+    ]
+    for args, kwargs, msg in cases:
+        with pytest.raises(ValueError, match=msg):
+            similarity.cosine_topk_pq(emb, *args, k=2, m=kwargs.get("m", 3))
+
+
+def test_pq_sub_dim_follows_vector_length(spark):
+    """The subvector width comes from the data, not a fixed 64: 12-dim
+    vectors at m=4 split into 3-wide subspaces, and the exact re-rank
+    puts the query's scaled copy first with cosine 1."""
+    base = [1.0, 2.0, 0.5, -1.0, 3.0, 0.25, 1.5, -2.0, 0.75, 1.0, 2.5, -0.5]
+    rows = [(0, base), (1, [2.0 * x for x in base])]
+    rows += [(i, [float((i * 7 + j) % 5) - 1.5 for j in range(12)]) for i in range(2, 10)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    got = similarity.cosine_topk_pq(emb, 0, [2, 3, 4, 5], k=3, m=4, shortlist=9).collect()
+    assert len(got) == 3
+    assert (got[0].neighbor_id, got[0].pq_rank, got[0].sim) == (1, 1, 1.0)
+
+
 def test_pq_shortlist_rerank_recall(spark):
     """PQ ADC shortlist + exact re-rank must recover most of the true
     top-10 (deterministic: 1.0 at this fixture; the bound leaves noise

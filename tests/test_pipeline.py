@@ -81,9 +81,45 @@ def test_temp_view_sink(spark):
 def test_cell_guard_counts_header(spark):
     register_views(spark, SF_SMALL, ("region",))
     df = spark.table("region")  # 5 rows x 2 cols -> (5+1)*2 = 12 cells
-    assert cell_count_guard(df, "region", limit=13) == 5
+    table = cell_count_guard(df, "region", limit=13)
+    assert table.num_rows == 5 and table.column_names == ["r_regionkey", "r_name"]
     with pytest.raises(CellLimitExceeded):
         cell_count_guard(df, "region", limit=12)  # >= limit rejects (loader.py:250)
+
+
+def test_cell_guard_matches_rule_at_every_boundary(spark):
+    """The bounded collect decides exactly the reference rule: accept iff
+    (rows + 1) * cols < limit, on both sides of every boundary, including
+    limit <= cols, which rejects even an empty result."""
+    for cols in (1, 2, 3):
+        for rows in range(8):
+            df = spark.range(rows).selectExpr(*[f"id + {c} AS c{c}" for c in range(cols)])
+            edge = (rows + 1) * cols
+            for limit in sorted({1, cols, edge - 1, edge, edge + 1} - {0}):
+                accept = edge < limit
+                if accept:
+                    table = cell_count_guard(df, "t", limit)
+                    assert table.num_rows == rows, (rows, cols, limit)
+                    assert table.column("c0").to_pylist() == list(range(rows))
+                else:
+                    with pytest.raises(CellLimitExceeded):
+                        cell_count_guard(df, "t", limit)
+    # no columns: no cells to bound, and nothing a sheet can hold
+    with pytest.raises(ValueError, match="no columns"):
+        cell_count_guard(spark.range(3).select(), "t", 10)
+
+
+def test_cell_guard_stops_at_the_limit(spark):
+    """An over-limit result is rejected after collecting r_max + 1 rows:
+    it is never counted or collected in full."""
+    import time
+
+    limit = 100  # 1 column: r_max = ceil(100 / 1) - 2 = 98
+    t0 = time.perf_counter()
+    with pytest.raises(CellLimitExceeded) as exc:
+        cell_count_guard(spark.range(10**8), "huge", limit)
+    assert exc.value.cells == (98 + 1 + 1) * 1  # r_max + 1 rows + header
+    assert time.perf_counter() - t0 < 60
 
 
 class FakeDrive:
@@ -92,6 +128,9 @@ class FakeDrive:
     fail_chunks holds (offset, n_failures) transient-error injections)."""
 
     def __init__(self, page_size=100, fail_chunks=None):
+        import threading
+
+        self._lock = threading.Lock()  # pipelines may upload concurrently
         self.files: dict[str, dict] = {}
         self.payloads: dict[str, bytes] = {}
         self.counter = 0
@@ -113,10 +152,15 @@ class FakeDrive:
             assert "parents" not in metadata  # loader.py:170: update strips parents
             self.files[file_id].update(metadata)
         else:
-            self.counter += 1
-            file_id = f"id{self.counter}"
+            with self._lock:
+                self.counter += 1
+                file_id = f"id{self.counter}"
             self.files[file_id] = {**metadata, "id": file_id}
         return {"file_id": file_id, "buf": bytearray()}
+
+    def sheets(self) -> dict[str, bytes]:
+        """Uploaded payloads by sheet name."""
+        return {self.files[fid]["name"]: body for fid, body in self.payloads.items()}
 
     def upload_chunk(self, session, chunk, offset, total):
         from sheetsetl_spark.sinks.sheets import TransientUploadError
@@ -789,3 +833,120 @@ def test_cli_run_folder(spark, tmp_path, capsys):
     assert "bad_query: sql_error" in printed
     got = spark.read.parquet(str(out / "ok_query"))
     assert got.count() > 0 and set(got.columns) == {"o_orderstatus", "n"}
+
+
+def test_cell_limit_must_be_positive(spark, tmp_path):
+    """cell_limit < 1 is refused at construction, and the CLI passes
+    --cell-limit through as given (0 used to become the 2M default)."""
+    from sheetsetl_spark.__main__ import main
+
+    for bad in (0, -5):
+        with pytest.raises(ValueError, match="cell_limit"):
+            SqlFolderPipeline(spark, str(tmp_path), TempViewSink(), cell_limit=bad)
+    qdir = tmp_path / "queries"
+    qdir.mkdir()
+    (qdir / "one.sql").write_text("SELECT 1 AS a")
+    with pytest.raises(ValueError, match="cell_limit must be >= 1, got 0"):
+        main(["run", str(qdir), str(tmp_path / "out"), "--tables", SF_SMALL,
+              "--cell-limit", "0"])
+
+
+def test_pipeline_runtime_errors_are_per_file(spark, tmp_path):
+    """A query that fails while it runs (not at analysis) records
+    sql_error for that file and the run goes on (loader.py:232-234),
+    whether the failing expression filters rows or is only projected."""
+    d = tmp_path / "rt_sql"
+    d.mkdir()
+    (d / "a_good.sql").write_text("SELECT r_regionkey, r_name FROM region")
+    (d / "b_late_filter.sql").write_text(
+        "SELECT id FROM range(5) WHERE CASE WHEN id = 2 THEN raise_error('late') ELSE true END"
+    )
+    (d / "c_projected.sql").write_text(
+        "SELECT id, CASE WHEN id = 2 THEN raise_error('projected') ELSE id END AS x "
+        "FROM range(5)"
+    )
+    (d / "d_good.sql").write_text("SELECT COUNT(*) AS n FROM region")
+    drive = FakeDrive()
+    report = SqlFolderPipeline(
+        spark,
+        str(d),
+        GoogleSheetsSink("folder1", client=drive),
+        setup=lambda s: register_views(s, SF_SMALL, ("region",)),
+    ).run()
+    by_name = {r.name: r for r in report.results}
+    assert [by_name[n].status for n in ("a_good", "b_late_filter", "c_projected", "d_good")] == [
+        "ok", "sql_error", "sql_error", "ok",
+    ]
+    assert "late" in by_name["b_late_filter"].error
+    assert "projected" in by_name["c_projected"].error
+    assert by_name["c_projected"].rows is None
+    assert set(drive.sheets()) == {"a_good", "d_good"}
+
+
+def test_pipeline_runs_each_query_once(spark, tmp_path):
+    """The guard's collect is the query's only execution: a Python UDF in
+    the WHERE clause is called once per input row, not once for the
+    guard and again for the sink."""
+    from pyspark.sql.types import BooleanType
+
+    n = 40
+    calls = spark.sparkContext.accumulator(0)
+
+    def bump(_x):
+        calls.add(1)
+        return True
+
+    spark.udf.register("bump_calls", bump, BooleanType())
+    d = tmp_path / "once_sql"
+    d.mkdir()
+    (d / "udf_filter.sql").write_text(f"SELECT id FROM range({n}) WHERE bump_calls(id)")
+    drive = FakeDrive()
+    report = SqlFolderPipeline(spark, str(d), GoogleSheetsSink("folder1", client=drive)).run()
+    assert [(r.status, r.rows) for r in report.results] == [("ok", n)]
+    assert calls.value == n
+    assert len(drive.sheets()["udf_filter"].decode().splitlines()) == n + 1
+
+
+def test_pipeline_keeps_query_row_order(spark, tmp_path):
+    """An ORDER BY ... DESC file uploads its rows in the query's order,
+    across several Arrow batches of the collected result."""
+    n = 25_000  # > spark.sql.execution.arrow.maxRecordsPerBatch (10,000)
+    d = tmp_path / "order_sql"
+    d.mkdir()
+    (d / "desc.sql").write_text(
+        f"SELECT id, CAST(id * 7 AS STRING) AS s FROM range({n}) ORDER BY id DESC"
+    )
+    drive = FakeDrive()
+    report = SqlFolderPipeline(spark, str(d), GoogleSheetsSink("folder1", client=drive)).run()
+    assert [r.status for r in report.results] == ["ok"]
+    lines = drive.sheets()["desc"].decode().splitlines()
+    assert lines[0] == "id,s"
+    assert lines[1:] == [f"{i},{i * 7}" for i in range(n - 1, -1, -1)]
+
+
+def test_pipeline_concurrent_uploads_match_serial(spark, tmp_path):
+    """max_concurrency=2 publishes byte-identical sheets to a serial run."""
+    d = tmp_path / "conc_sql"
+    d.mkdir()
+    (d / "nations.sql").write_text("SELECT * FROM nation ORDER BY n_nationkey DESC")
+    (d / "regions.sql").write_text("SELECT r_name, r_regionkey FROM region")
+    (d / "status.sql").write_text(
+        "SELECT o_orderstatus, COUNT(*) AS n, SUM(o_totalprice) AS total "
+        "FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus"
+    )
+    (d / "dates.sql").write_text(
+        "SELECT o_orderdate, o_orderkey FROM orders ORDER BY o_orderdate, o_orderkey LIMIT 300"
+    )
+    payloads = []
+    for conc in (1, 2):
+        drive = FakeDrive()
+        report = SqlFolderPipeline(
+            spark,
+            str(d),
+            GoogleSheetsSink("folder1", client=drive),
+            setup=lambda s: register_views(s, SF_SMALL, ("nation", "region", "orders")),
+            max_concurrency=conc,
+        ).run()
+        assert [r.status for r in report.results] == ["ok"] * 4
+        payloads.append(drive.sheets())
+    assert payloads[0] == payloads[1] and len(payloads[0]) == 4
