@@ -40,8 +40,8 @@ def main(argv: list[str] | None = None) -> int:
         type=int,
         default=None,
         help="reject results of (rows + 1) * cols >= N cells (default 2,000,000, "
-        "the Sheets cap); also bounds the rows collected to the driver per "
-        "file, for every sink",
+        "the Sheets cap); checked by a count, and the sink then "
+        "writes from the executors, so no result is collected to the driver",
     )
     run.add_argument(
         "--ci-collation",

@@ -841,22 +841,17 @@ def cosine_topk_pq(
         raise ValueError(
             f"cosine_topk_pq: need m >= 1 and 1..100 seeds, got m={m}, {len(seeds)} seeds"
         )
-    # The seed/query norm is _checked_norm's fold without its raise: a
-    # degenerate row yields n = NULL and is refused below as ValueError,
+    # The seed/query norm is _checked_norm's sqrt(<v,v>) without its raise:
+    # a degenerate row yields n = NULL and is refused below as ValueError,
     # before any corpus pass (no divide by zero under ANSI either).
+    sq = _dot("v", "v")
     small_rows = (
         embeddings.select(
             F.col(id_col).alias("vid"),
             F.col(vec_col).cast("array<double>").alias("v"),
         )
         .filter(F.col("vid").isin(seeds + [query_vec_id]))
-        .withColumn(
-            "n",
-            F.expr(
-                "aggregate(zip_with(v, v, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x, "
-                "s -> CASE WHEN s > 0 THEN sqrt(s) END)"
-            ),
-        )
+        .withColumn("n", F.when(sq > 0, F.sqrt(sq)))
         .select("vid", "n", F.transform(F.col("v"), lambda x: x / F.col("n")).alias("u"))
         .collect()
     )

@@ -9,14 +9,17 @@ Control flow mirrors /root/reference/src/loader.py:223-255 one-to-one:
   with per-file error isolation: a syntax or runtime error (:232-234) or
   a sink error (:184-186) logs and skips that file, never aborts the run.
 
-What changes Spark-side: the execute->spool->guard steps become one
-bounded collect per query. The guard collects at most one row past the
-largest count the cell limit allows, as Arrow, and rejects on the same
-rule; an accepted result is handed to the sink as a frame over those
-collected rows, so every sink publishes exactly what the guard checked
-and no sink runs the query again. Every output is capped below the cell
-limit, so this driver-side materialization is bounded, as the
-reference's spool is.
+What changes Spark-side depends on where the sink builds its output.
+A sink that builds it on the driver (the Sheets upload, ``collects =
+True``) gets one bounded collect per query: the guard collects at most
+one row past the largest count the cell limit allows, as Arrow, rejects
+on the same rule, and the sink publishes exactly those rows without
+running the query again. A sink that writes from the executors (the
+directory sinks, temp views) gets a count and then writes the
+query's own frame, so no result passes through driver memory; the
+query runs twice there. Collecting for them was measured: a near-limit
+result of long strings killed the driver JVM (OutOfMemoryError) and
+with it the rest of the run, where the distributed write publishes it.
 """
 
 from __future__ import annotations
@@ -27,7 +30,13 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
 
-from sheetsetl_spark.sinks.base import DEFAULT_CELL_LIMIT, CellLimitExceeded, Sink, cell_count_guard
+from sheetsetl_spark.sinks.base import (
+    DEFAULT_CELL_LIMIT,
+    CellLimitExceeded,
+    Sink,
+    cell_count_guard,
+    cell_limit_count,
+)
 
 logger = logging.getLogger(__name__)
 
@@ -95,12 +104,13 @@ class SqlFolderPipeline:
     MySQL->Spark translator first (LIMIT off,cnt / DATE_FORMAT patterns /
     GROUP_CONCAT), so the reference's analyst files run unmodified.
 
-    ``cell_limit`` (>= 1) is the reference's 2M-cell sheet cap. It also
-    bounds the rows each file collects to the driver, for every sink: a
-    file's result is collected once by the guard and published from there.
+    ``cell_limit`` (>= 1) is the reference's 2M-cell sheet cap. For a
+    sink with ``collects = True`` it also bounds the rows each file
+    collects to the driver: the result is collected once by the guard and
+    published from there.
 
     ``validate`` (optional) is a ``(name, df) -> None`` hook called after
-    the cell guard, on the collected result, and BEFORE the sink — raise
+    the cell guard, on the frame the sink will get, and BEFORE the sink — raise
     :class:`ValidationFailed` (or return normally) to gate publishing on
     data-quality contracts
     (e.g. ``operators/quality_checks.py::check_constraints``); a failure
@@ -181,17 +191,21 @@ class SqlFolderPipeline:
         except Exception as exc:  # parse/analysis error -> skip file (loader.py:232-234)
             logger.exception("SQL error in %s", qf.name)
             return QueryResult(qf.name, "sql_error", error=str(exc))
+        collects = getattr(self.sink, "collects", False)
         try:
-            # the only execution of the query; sinks get the collected rows
-            table = cell_count_guard(df, qf.name, self.cell_limit)
+            if collects:  # the query's only execution: the sink gets these rows
+                table = cell_count_guard(df, qf.name, self.cell_limit)
+            else:  # the sink writes df from the executors
+                rows = cell_limit_count(df, qf.name, self.cell_limit)
         except CellLimitExceeded as exc:  # loader.py:250-253
             logger.error("%s over the %d-cell limit, skipping", qf.name, self.cell_limit)
             return QueryResult(qf.name, "cell_limit", error=str(exc))
         except Exception as exc:  # runtime error (raise_error, ANSI cast...) -> skip file
             logger.exception("SQL error in %s", qf.name)
             return QueryResult(qf.name, "sql_error", error=str(exc))
-        rows = table.num_rows
-        df = self.spark.createDataFrame(table, schema=df.schema)
+        if collects:
+            rows = table.num_rows
+            df = self.spark.createDataFrame(table, schema=df.schema)
         if self.validate is not None:
             try:
                 self.validate(qf.name, df)

@@ -9,7 +9,7 @@ adapter whose network layer is injectable (credentials are out of scope —
 mirrors the reference's A11 auth bootstrap being environment-specific).
 """
 
-from sheetsetl_spark.sinks.base import CellLimitExceeded, Sink, cell_count_guard
+from sheetsetl_spark.sinks.base import CellLimitExceeded, Sink, cell_count_guard, cell_limit_count
 from sheetsetl_spark.sinks.bucketed import BucketedTableSink
 from sheetsetl_spark.sinks.local import (
     CsvDirSink,
@@ -24,6 +24,7 @@ __all__ = [
     "Sink",
     "CellLimitExceeded",
     "cell_count_guard",
+    "cell_limit_count",
     "CsvDirSink",
     "JsonDirSink",
     "OrcDirSink",

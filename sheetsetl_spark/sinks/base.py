@@ -25,6 +25,12 @@ class CellLimitExceeded(Exception):
         super().__init__(f"{name}: {cells} cells >= limit {limit}")
 
 
+def _check_cells(name: str, rows: int, cols: int, limit: int) -> None:
+    cells = (rows + 1) * cols
+    if cells >= limit:
+        raise CellLimitExceeded(name, cells, limit)
+
+
 def cell_count_guard(df: DataFrame, name: str, limit: int = DEFAULT_CELL_LIMIT) -> pa.Table:
     """Collect the result once, bounded by the cell limit, and raise if
     it hits the limit ((rows + header) * cols >= limit, loader.py:241-253).
@@ -32,28 +38,50 @@ def cell_count_guard(df: DataFrame, name: str, limit: int = DEFAULT_CELL_LIMIT) 
 
     ``r_max = ceil(limit / cols) - 2`` is the largest row count that
     passes, so collecting ``r_max + 1`` rows decides the rule without a
-    separate count: the reference likewise counts while it spools. A
-    rejected result stops after ``r_max + 1`` rows, and
-    ``CellLimitExceeded.cells`` is then the first failing count, not
-    the full result's. Every accepted result is below the limit, so the
-    collect is one bounded driver-side materialization and sinks
-    publish exactly the rows checked here without re-running the query.
+    separate count, as the reference counts while it spools. A rejected
+    result stops after ``r_max + 1`` rows, and ``CellLimitExceeded.cells``
+    is then the first failing count, not the full result's. This is the
+    guard for sinks that build their output on the driver anyway
+    (``Sink.collects``): they publish exactly these rows without running
+    the query again. The limit bounds cells, not bytes: the accepted
+    result is held whole in driver memory.
     """
     cols = len(df.columns)
     if cols == 0:
         raise ValueError(f"{name}: the query returns no columns")
     r_max = -(-limit // cols) - 2
     table = df.limit(max(r_max + 1, 0)).toArrow()
-    cells = (table.num_rows + 1) * cols
-    if cells >= limit:
-        raise CellLimitExceeded(name, cells, limit)
+    _check_cells(name, table.num_rows, cols, limit)
     return table
+
+
+def cell_limit_count(df: DataFrame, name: str, limit: int = DEFAULT_CELL_LIMIT) -> int:
+    """The same rule without collecting: ``count()`` the result on the
+    executors, raise if the limit is hit, return the row count.
+
+    This is the guard for sinks that write from the executors: the sink
+    then runs the query a second time, but no result passes through
+    driver memory. A plain ``count()`` is one partial-aggregate job; a
+    bounded ``limit(r_max + 1).count()`` adds a single-partition shuffle
+    and measured slower on small results. The count prunes columns it
+    does not need, so an error raised only by a projected column
+    surfaces in the sink's write.
+    """
+    rows = df.count()
+    _check_cells(name, rows, len(df.columns), limit)
+    return rows
 
 
 @runtime_checkable
 class Sink(Protocol):
     """Create-or-replace a named output (upsert identity = name, mirroring
-    loader.py:159-179's (folder, name, mime) lookup)."""
+    loader.py:159-179's (folder, name, mime) lookup).
+
+    A sink that builds its whole output on the driver (the Sheets upload)
+    sets a class attribute ``collects = True``: the pipeline then hands it
+    a frame over the rows :func:`cell_count_guard` collected, so the query
+    runs once. Any other sink gets the query's own frame after
+    :func:`cell_limit_count` and writes it from the executors."""
 
     def write(self, df: DataFrame, name: str) -> None: ...
 

@@ -3,9 +3,7 @@
 Each write is mode('overwrite') — the Spark-native create-or-replace that
 matches the reference's update-else-create upsert (loader.py:168-179).
 CSV keeps header=True to mirror the reference's spool format
-(loader.py:240: header row first). Under ``SqlFolderPipeline`` each
-write reads the result the cell guard already collected, so the query
-is not run again.
+(loader.py:240: header row first).
 """
 
 from __future__ import annotations

@@ -60,6 +60,10 @@ class DriveClient(Protocol):
 
 
 class GoogleSheetsSink:
+    #: the upload is built on the driver: the pipeline hands ``write`` the
+    #: rows its cell guard collected (``Sink`` contract, sinks/base.py)
+    collects = True
+
     def __init__(
         self,
         dest_folder: str,

@@ -15,6 +15,7 @@ from sheetsetl_spark.sinks import (
     ParquetDirSink,
     TempViewSink,
     cell_count_guard,
+    cell_limit_count,
 )
 from tests.conftest import SF_SMALL
 
@@ -85,12 +86,16 @@ def test_cell_guard_counts_header(spark):
     assert table.num_rows == 5 and table.column_names == ["r_regionkey", "r_name"]
     with pytest.raises(CellLimitExceeded):
         cell_count_guard(df, "region", limit=12)  # >= limit rejects (loader.py:250)
+    assert cell_limit_count(df, "region", limit=13) == 5
+    with pytest.raises(CellLimitExceeded):
+        cell_limit_count(df, "region", limit=12)
 
 
 def test_cell_guard_matches_rule_at_every_boundary(spark):
-    """The bounded collect decides exactly the reference rule: accept iff
-    (rows + 1) * cols < limit, on both sides of every boundary, including
-    limit <= cols, which rejects even an empty result."""
+    """Both guards, the bounded collect and the count, decide exactly the
+    reference rule: accept iff (rows + 1) * cols < limit, on
+    both sides of every boundary, including limit <= cols, which rejects
+    even an empty result."""
     for cols in (1, 2, 3):
         for rows in range(8):
             df = spark.range(rows).selectExpr(*[f"id + {c} AS c{c}" for c in range(cols)])
@@ -101,9 +106,11 @@ def test_cell_guard_matches_rule_at_every_boundary(spark):
                     table = cell_count_guard(df, "t", limit)
                     assert table.num_rows == rows, (rows, cols, limit)
                     assert table.column("c0").to_pylist() == list(range(rows))
+                    assert cell_limit_count(df, "t", limit) == rows, (rows, cols, limit)
                 else:
-                    with pytest.raises(CellLimitExceeded):
-                        cell_count_guard(df, "t", limit)
+                    for guard in (cell_count_guard, cell_limit_count):
+                        with pytest.raises(CellLimitExceeded):
+                            guard(df, "t", limit)
     # no columns: no cells to bound, and nothing a sheet can hold
     with pytest.raises(ValueError, match="no columns"):
         cell_count_guard(spark.range(3).select(), "t", 10)
@@ -950,3 +957,52 @@ def test_pipeline_concurrent_uploads_match_serial(spark, tmp_path):
         assert [r.status for r in report.results] == ["ok"] * 4
         payloads.append(drive.sheets())
     assert payloads[0] == payloads[1] and len(payloads[0]) == 4
+
+
+def test_executor_side_sinks_write_the_query_frame(spark, tmp_path, monkeypatch):
+    """Sinks that write from the executors never get a collected result:
+    the runner only counts, and the sink writes the query's own frame.
+    Runtime errors stay per file: one in a filter fails the count
+    (sql_error); one only in a projected column fails the write
+    (sink_error). A temp view keeps column types Arrow cannot carry."""
+    from sheetsetl_spark.pipeline import runner
+
+    def no_collect(*_a, **_k):
+        raise AssertionError("an executor-side sink must not collect")
+
+    monkeypatch.setattr(runner, "cell_count_guard", no_collect)
+    d = tmp_path / "dir_sql"
+    d.mkdir()
+    (d / "a_good.sql").write_text("SELECT r_regionkey, r_name FROM region")
+    (d / "b_late_filter.sql").write_text(
+        "SELECT id FROM range(5) WHERE CASE WHEN id = 2 THEN raise_error('late') ELSE true END"
+    )
+    (d / "c_projected.sql").write_text(
+        "SELECT id, CASE WHEN id = 2 THEN raise_error('projected') ELSE id END AS x "
+        "FROM range(5)"
+    )
+    (d / "d_good.sql").write_text("SELECT COUNT(*) AS n FROM region")
+    out = tmp_path / "out"
+    report = SqlFolderPipeline(
+        spark,
+        str(d),
+        CsvDirSink(str(out)),
+        setup=lambda s: register_views(s, SF_SMALL, ("region",)),
+    ).run()
+    by_name = {r.name: r for r in report.results}
+    assert [(by_name[n].status, by_name[n].rows) for n in sorted(by_name)] == [
+        ("ok", 5), ("sql_error", None), ("sink_error", 5), ("ok", 1),
+    ]
+    assert "late" in by_name["b_late_filter"].error
+    assert "projected" in by_name["c_projected"].error
+    back = spark.read.option("header", True).csv(str(out / "a_good"))
+    assert back.columns == ["r_regionkey", "r_name"] and back.count() == 5
+
+    v = tmp_path / "view_sql"
+    v.mkdir()
+    (v / "months.sql").write_text("SELECT INTERVAL '14' MONTH AS ym, 1 AS k")
+    report = SqlFolderPipeline(spark, str(v), TempViewSink()).run()
+    assert [(r.status, r.rows) for r in report.results] == [("ok", 1)]
+    assert spark.table("months").selectExpr("CAST(ym AS STRING) AS s").first().s == (
+        "INTERVAL '14' MONTH"
+    )
