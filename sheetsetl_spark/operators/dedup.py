@@ -1,11 +1,31 @@
 """Deduplication operators (SURVEY §2-C C1/C2): exact, n-gram Jaccard,
-MinHash+LSH, SimHash.
+prefix-filter and edit-distance joins, SimHash, and banded near-dup over
+text, vectors and media.
 
 Scale design: every variant reduces the pairwise-comparison space BEFORE
 any join — exact dedup shuffles on a 16-byte hash; Jaccard/LSH only join
 documents that share a shingle/band bucket (equi-joins Catalyst can
 shuffle-partition), never a cross join. At 100 TB the band join is the
 only O(candidate) stage and AQE's skew-join splits hot buckets.
+
+Banded near-dup is filter-and-verify: candidates come only from
+:func:`_band_join`, the (band_idx, band key) equi-join of two band
+stacks, and only its distinct colliding pairs are verified. Each family
+keeps just its validator, its band stack and its verify step:
+
+* MinHash (text Jaccard): :func:`_rows_per_band`, :func:`_band_stack`
+  keyed ``band_hash``; exact Jaccard over shingle arrays
+  (:func:`_array_jaccard_pairs`) or the signature-agreement estimate
+  (:func:`incremental_neardup_filter_sig`).
+* Hyperplane (embedding cosine): :func:`_planes_per_band`,
+  :func:`_hyperplane_stack` keyed ``band_val``; exact cosine
+  (:func:`_cosine_pairs`).
+* Hamming (media fingerprints, ``operators/multimodal.py``):
+  ``_hamming_banding``, ``_hamming_stack`` keyed ``band_val``;
+  ``bit_count(xor) <= max_hamming``.
+
+Every family has a pair finder over one corpus and an incremental filter
+of a new batch against history or its stored index.
 """
 
 from __future__ import annotations
@@ -445,25 +465,38 @@ def _minhash_band_candidates(
 
 
 def _band_join(
-    stack_a: DataFrame, stack_b: DataFrame, id_col: str, pair_filter: Column | None = None
+    stack_a: DataFrame,
+    stack_b: DataFrame,
+    id_col: str,
+    pair_filter: Column | None = None,
+    key: str = "band_hash",
+    carry: tuple[tuple[str, str], ...] = (("n_sh", "n"),),
+    out: tuple[str, str] = ("doc_a", "doc_b"),
 ) -> DataFrame:
-    """Distinct (doc_a, doc_b, n_a, n_b) over the (band_idx, band_hash)
-    equi-join of two :func:`_band_stack` frames carrying ``n_sh``: doc_a
-    from ``stack_a``, doc_b from ``stack_b``, kept where ``pair_filter``
-    (over doc_a/doc_b/n_a/n_b) holds."""
+    """The candidate join of every banded near-dup path (module
+    docstring): distinct (out_a, out_b, *carried) over the
+    (band_idx, ``key``) equi-join of two band stacks, ``id_col`` of
+    ``stack_a`` as out_a and of ``stack_b`` as out_b, kept where
+    ``pair_filter`` (over the output names) holds. Each ``(col, name)``
+    of ``carry`` rides from both sides as ``name_a``, ``name_b``; the
+    default is the MinHash stack's ``n_sh``. A carried array rides
+    through the join's shuffle and ``distinct`` once per colliding band,
+    so the verify steps fetch wide arrays for the distinct pairs
+    afterwards; :func:`incremental_embedding_neardup_filter` says why
+    it does not."""
     left, right = (
         stack.select(
-            F.col(id_col).alias(f"doc_{s}"),
-            F.col("n_sh").alias(f"n_{s}"),
+            F.col(id_col).alias(o),
+            *[F.col(c).alias(f"{name}_{s}") for c, name in carry],
             "band_idx",
-            "band_hash",
+            key,
         )
-        for s, stack in (("a", stack_a), ("b", stack_b))
+        for s, o, stack in (("a", out[0], stack_a), ("b", out[1], stack_b))
     )
-    pairs = left.join(right, ["band_idx", "band_hash"])
+    pairs = left.join(right, ["band_idx", key])
     if pair_filter is not None:
         pairs = pairs.filter(pair_filter)
-    return pairs.select("doc_a", "doc_b", "n_a", "n_b").distinct()
+    return pairs.select(*out, *[f"{name}_{s}" for _, name in carry for s in "ab"]).distinct()
 
 
 def _array_jaccard_pairs(
@@ -691,6 +724,69 @@ def choose_banding(n_rows: int, bands: int = 4) -> tuple[int, int]:
     return width * bands, bands
 
 
+def _planes_per_band(num_planes: int, bands: int) -> int:
+    """The banding contract of the hyperplane family: the ``num_planes``
+    signature bits split into ``bands`` >= 1 bands of equal width, so
+    ``bands`` must divide ``num_planes`` >= 1; anything else is a
+    ValueError. Returns the band width in bits."""
+    if bands < 1 or num_planes < 1 or num_planes % bands:
+        raise ValueError(
+            f"bands must be >= 1 and divide num_planes >= 1, "
+            f"got num_planes={num_planes}, bands={bands}"
+        )
+    return num_planes // bands
+
+
+def _hyperplane_signatures(
+    vectors: DataFrame,
+    num_planes: int | None,
+    bands: int,
+    dim: int,
+    id_col: str,
+    vec_col: str,
+    n_rows: int | None,
+    err_label: str,
+) -> tuple[DataFrame, int, int]:
+    """One side of a hyperplane band join: ``(sig, bands, width)``, sig
+    the :func:`_embedding_signatures` frame of ``vectors`` (one row per
+    vector) and the resolved banding. ``num_planes=None`` takes
+    :func:`choose_banding` of ``n_rows``, or of a ``count()`` of
+    ``vectors`` when that is None too; the banding must pass
+    :func:`_planes_per_band`. The projection is num_planes x dim
+    interpreted multiply-adds per vector, the compute-dense case
+    ``skew.widen_to_cores`` exists for (a compact corpus parquet exposes
+    1-8 row groups), so the vectors are widened first."""
+    if num_planes is None:
+        num_planes, bands = choose_banding(
+            n_rows if n_rows is not None else vectors.count(), bands
+        )
+    width = _planes_per_band(num_planes, bands)
+    from sheetsetl_spark.operators.skew import widen_to_cores
+
+    sig = _embedding_signatures(
+        widen_to_cores(vectors), num_planes, dim, id_col, vec_col, err_label
+    )
+    return sig, bands, width
+
+
+def _hyperplane_stack(sig: DataFrame, bands: int, width: int, *carry: str) -> DataFrame:
+    """(vec_id, *carry, band_idx, band_val): the signature frame in
+    band-exploded long form, one row per vector and band; band b's key
+    is bits [b * width, (b + 1) * width) of the signature string."""
+    band_arr = F.array(*[F.substring("bits", b * width + 1, width) for b in range(bands)])
+    return sig.select("vec_id", *carry, F.posexplode(band_arr).alias("band_idx", "band_val"))
+
+
+def _cosine_pairs(pairs: DataFrame, threshold: float) -> DataFrame:
+    """(vec_a, vec_b, sim) for the (vec_a, vec_b, v_a, v_b, n_a, n_b)
+    ``pairs`` whose exact cosine reaches ``threshold``, sim unrounded:
+    the verify step of the hyperplane family."""
+    from sheetsetl_spark.operators.similarity import _dot
+
+    sim = _dot("v_a", "v_b") / (F.col("n_a") * F.col("n_b"))
+    return pairs.select("vec_a", "vec_b", sim.alias("sim")).filter(F.col("sim") >= threshold)
+
+
 def embedding_neardup_pairs(
     vectors: DataFrame,
     threshold: float = 0.98,
@@ -737,64 +833,39 @@ def embedding_neardup_pairs(
     the pre-law default was a fixed 32/4 — >20k-row callers now get
     wider bands and thus slightly lower per-band recall (measured
     >0.99 at threshold 0.98; re-check if your threshold is looser).
+    Either way the banding must pass :func:`_planes_per_band`.
+
+    Candidates are the :func:`_band_join` self-join of the
+    :func:`_hyperplane_stack`; each distinct pair then fetches its two
+    vectors and norms from the signature frame for :func:`_cosine_pairs`.
 
     Output: (vec_a, vec_b, sim) with vec_a < vec_b and sim >= threshold.
     """
-    if num_planes is None:
-        num_planes, bands = choose_banding(
-            n_rows if n_rows is not None else vectors.count(), bands
-        )
-    if num_planes % bands:
-        raise ValueError(f"num_planes={num_planes} not divisible by bands={bands}")
-    rows_per_band = num_planes // bands
+    sig, bands, width = _hyperplane_signatures(
+        vectors, num_planes, bands, dim, id_col, vec_col, n_rows, "embedding_neardup_pairs"
+    )
     # Signature bits cost num_planes × dim multiply-adds per vector and
     # feed three consumers (banding + both verify sides) — persist so the
-    # projection runs once instead of three times; widen first so the
-    # projection (and every cached partition downstream) isn't capped at
-    # a compact fixture's row-group count (skew.widen_to_cores).
-    from sheetsetl_spark.operators.skew import widen_to_cores
-
-    sig = scoped_persist(
-        _embedding_signatures(
-            widen_to_cores(vectors),
-            num_planes, dim, id_col, vec_col, "embedding_neardup_pairs",
+    # projection runs once instead of three times.
+    sig = scoped_persist(sig)
+    stacked = _hyperplane_stack(sig, bands, width)
+    pairs = _band_join(
+        stacked, stacked, "vec_id", F.col("vec_a") < F.col("vec_b"),
+        key="band_val", carry=(), out=("vec_a", "vec_b"),
+    )
+    a, b = (
+        sig.select(
+            F.col("vec_id").alias(f"vec_{s}"), F.col("v").alias(f"v_{s}"), F.col("nrm").alias(f"n_{s}")
         )
+        for s in "ab"
     )
-    band_arr = F.array(
-        *[F.substring("bits", b * rows_per_band + 1, rows_per_band) for b in range(bands)]
-    )
-    stacked = sig.select(
-        "vec_id", F.posexplode(band_arr).alias("band_idx", "band_val")
-    )
-    left = stacked.select(F.col("vec_id").alias("vec_a"), "band_idx", "band_val")
-    right = stacked.select(F.col("vec_id").alias("vec_b"), "band_idx", "band_val")
-    pairs = (
-        left.join(right, ["band_idx", "band_val"])
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .select("vec_a", "vec_b")
-        .distinct()
-    )
-    ea = sig.select(
-        F.col("vec_id").alias("vec_a"), F.col("v").alias("va"), F.col("nrm").alias("na")
-    )
-    eb = sig.select(
-        F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb")
-    )
-
-    from sheetsetl_spark.operators.similarity import _dot
-
-    sim = _dot("va", "vb") / (F.col("na") * F.col("nb"))
     # No broadcast hint on the vector sides: at fixture scale AQE
     # broadcasts them anyway, but at 10⁹ vectors the vector table is the
     # BIG side (candidates ≪ corpus) and the hint would force an
     # un-broadcastable build — let the planner pick shuffle-hash on the
     # id key when the sides grow.
-    return (
-        pairs.join(ea, "vec_a")
-        .join(eb, "vec_b")
-        .select("vec_a", "vec_b", sim.alias("sim"))
-        .filter(F.col("sim") >= threshold)
-        .select("vec_a", "vec_b", F.round("sim", 6).alias("sim"))
+    return _cosine_pairs(pairs.join(a, "vec_a").join(b, "vec_b"), threshold).select(
+        "vec_a", "vec_b", F.round("sim", 6).alias("sim")
     )
 
 
@@ -808,7 +879,8 @@ def embedding_band_index(
     n_rows: int | None = None,
 ) -> DataFrame:
     """The STORED index for incremental embedding near-dup: one row per
-    (vector, band) — (vec_id, v, nrm, band_idx, band_val).
+    (vector, band) — (vec_id, v, nrm, band_idx, band_val), the
+    :func:`_hyperplane_stack` carrying the vector and its norm.
 
     Unlike the text index (minhash_band_table stores signatures only —
     re-deriving shingles would rescan history TEXT), the vector itself
@@ -830,28 +902,10 @@ def embedding_band_index(
     must match the stored banding:
     :func:`incremental_embedding_neardup_filter` re-derives it from
     the index frame itself, never from the batch."""
-    if num_planes is None:
-        num_planes, bands = choose_banding(
-            n_rows if n_rows is not None else vectors.count(), bands
-        )
-    if num_planes % bands:
-        raise ValueError(f"num_planes={num_planes} not divisible by bands={bands}")
-    rpb = num_planes // bands
-    from sheetsetl_spark.operators.skew import widen_to_cores
-
-    # the signature projection is num_planes x dim interpreted
-    # multiply-adds per vector — the compute-dense case widen_to_cores
-    # exists for (a compact corpus parquet exposes 1-8 row groups)
-    sig = _embedding_signatures(
-        widen_to_cores(vectors), num_planes, dim, id_col, vec_col,
-        "embedding_band_index",
+    sig, bands, width = _hyperplane_signatures(
+        vectors, num_planes, bands, dim, id_col, vec_col, n_rows, "embedding_band_index"
     )
-    band_arr = F.array(
-        *[F.substring("bits", b * rpb + 1, rpb) for b in range(bands)]
-    )
-    return sig.select(
-        "vec_id", "v", "nrm", F.posexplode(band_arr).alias("band_idx", "band_val")
-    )
+    return _hyperplane_stack(sig, bands, width, "v", "nrm")
 
 
 def incremental_embedding_neardup_filter(
@@ -868,11 +922,19 @@ def incremental_embedding_neardup_filter(
     """Incremental embedding near-dup against a MAINTAINED band index
     (:func:`embedding_band_index`): drop new-batch vectors whose EXACT
     cosine to any colliding indexed vector reaches ``threshold``; return
-    the surviving new rows. The vector twin of
-    :func:`incremental_neardup_filter_sig` (same ingest shape as the
-    reference-scale story: candidates from a band equi-join against the
-    stored index, verification only on collisions, O(new + collisions)
-    per ingest, no history rescan).
+    the surviving new rows. The hyperplane member of the incremental
+    filters: candidates are the :func:`_band_join` of the batch's own
+    band index against the stored one, verification
+    (:func:`_cosine_pairs`) runs only on collisions, O(new + collisions)
+    per ingest, no history rescan.
+
+    Both indexes carry their vectors and norms through the band join.
+    Deduplicating ids first and fetching the vectors afterwards from
+    each index's band-0 row reads the index twice; for an index built
+    in the same plan (c49) the second read re-runs the signature
+    projection, measured +0.17 to +0.42 s per c49 run at sf0.1 on a
+    4-core host, and pinning that index with a local checkpoint cost
+    more than it saved.
 
     ``max_bucket_size`` caps degenerate index buckets before the join
     (a hot band value shared by millions of history vectors would make
@@ -892,46 +954,20 @@ def incremental_embedding_neardup_filter(
             F.max("band_idx").alias("bi"),
             F.max(F.length("band_val")).alias("w"),
         ).collect()[0]
-        if hdr["bi"] is None:  # empty index: nothing stored to match
-            num_planes, bands = choose_banding(new_vectors.count(), bands)
-        else:
+        if hdr["bi"] is not None:  # else: empty index, nothing stored to match
             bands = int(hdr["bi"]) + 1
             num_planes = bands * int(hdr["w"])
-    if max_bucket_size is not None:
-        index = _drop_hot_keys(index, ["band_idx", "band_val"], max_bucket_size)
-    new_bands = embedding_band_index(
+    new_index = embedding_band_index(
         new_vectors, num_planes=num_planes, bands=bands, dim=dim,
         id_col=id_col, vec_col=vec_col,
     )
-    old = index.select(
-        F.col("vec_id").alias("old_id"),
-        F.col("v").alias("old_v"),
-        F.col("nrm").alias("old_n"),
-        "band_idx",
-        "band_val",
+    if max_bucket_size is not None:
+        index = _drop_hot_keys(index, ["band_idx", "band_val"], max_bucket_size)
+    candidates = _band_join(
+        new_index, index, "vec_id", key="band_val",
+        carry=(("v", "v"), ("nrm", "n")), out=("vec_a", "vec_b"),
     )
-    new = new_bands.select(
-        F.col("vec_id").alias("new_id"),
-        F.col("v").alias("new_v"),
-        F.col("nrm").alias("new_n"),
-        "band_idx",
-        "band_val",
-    )
-    candidates = (
-        new.join(old, ["band_idx", "band_val"])
-        .select("new_id", "new_v", "new_n", "old_id", "old_v", "old_n")
-        .distinct()
-    )
-    from sheetsetl_spark.operators.similarity import _dot
-
-    dups = (
-        candidates.withColumn(
-            "sim", _dot("new_v", "old_v") / (F.col("new_n") * F.col("old_n"))
-        )
-        .filter(F.col("sim") >= threshold)
-        .select(F.col("new_id").alias(id_col))
-        .distinct()
-    )
+    dups = _cosine_pairs(candidates, threshold).select(F.col("vec_a").alias(id_col)).distinct()
     return new_vectors.join(dups, id_col, "left_anti")
 
 
@@ -1417,41 +1453,38 @@ def incremental_neardup_filter_sig(
     the estimate concentrates around true Jaccard with sd
     ~sqrt(J(1-J)/num_hashes); raise num_hashes to tighten.
 
+    Candidates are the :func:`_band_join` of the batch's own band table
+    against the stored one; the agreement is computed only for the
+    distinct colliding id pairs, each fetching its two signatures from
+    its table's band-0 row (every indexed document has one).
+
     Returns the surviving new-batch rows."""
-    if max_bucket_size is not None:
-        band_table = _drop_hot_keys(
-            band_table, ["band_idx", "band_hash"], max_bucket_size
-        )
     new_bands = minhash_band_table(
         new_docs, num_hashes=num_hashes, bands=bands, n=n,
         id_col=id_col, text_col=text_col, max_shingle_df=max_shingle_df,
         hash_family=hash_family,
     )
-    old = band_table.select(
-        F.col(id_col).alias("old_id"),
-        F.col("sig").alias("old_sig"),
-        "band_idx",
-        "band_hash",
-    )
-    new = new_bands.select(
-        F.col(id_col).alias("new_id"), F.col("sig").alias("new_sig"),
-        "band_idx", "band_hash",
-    )
-    candidates = (
-        new.join(old, ["band_idx", "band_hash"])
-        .select("new_id", "new_sig", "old_id", "old_sig")
-        .distinct()
+    old_bands = band_table
+    if max_bucket_size is not None:
+        old_bands = _drop_hot_keys(band_table, ["band_idx", "band_hash"], max_bucket_size)
+    candidates = _band_join(new_bands, old_bands, id_col, carry=())
+    a, b = (
+        side.filter(F.col("band_idx") == 0).select(
+            F.col(id_col).alias(f"doc_{s}"), F.col("sig").alias(f"sig_{s}")
+        )
+        for s, side in (("a", new_bands), ("b", band_table))
     )
     agreement = F.size(
         F.filter(
-            F.zip_with("new_sig", "old_sig", lambda a, b: a == b),
+            F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
             lambda x: x,
         )
     ) / F.lit(num_hashes)
     dups = (
-        candidates.withColumn("est_jaccard", agreement)
-        .filter(F.col("est_jaccard") >= threshold)
-        .select(F.col("new_id").alias(id_col))
+        candidates.join(a, "doc_a")
+        .join(b, "doc_b")
+        .filter(agreement >= threshold)
+        .select(F.col("doc_a").alias(id_col))
         .distinct()
     )
     return new_docs.join(dups, id_col, "left_anti")

@@ -14,6 +14,12 @@ Scale notes: media corpora dominate byte volume, so the operators
 (a) never collect payloads to the driver, (b) repartition by a size
 budget before the UDF stage so one Arrow batch fits executor memory, and
 (c) project payload bytes away as soon as features are extracted.
+
+Fingerprint near-dup (image dHash, audio energy hash) is the Hamming
+family of the banded near-dup core in ``operators/dedup.py``: its
+validator is :func:`_hamming_banding`, its band stack
+:func:`_hamming_stack`, its candidates come from ``dedup._band_join``
+and its verify is ``bit_count(xor) <= max_hamming``.
 """
 
 from __future__ import annotations
@@ -25,6 +31,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from sheetsetl_spark.operators.dedup import _band_join
 
 #: Contract for a multimodal table: payload + typed metadata.
 MEDIA_SCHEMA = T.StructType(
@@ -689,7 +697,7 @@ def audio_neardup_pairs(
     # pass the fingerprint's LIVE bit-width (frames - 1 delta bits) as
     # hash_bits: banding a short hash over the full 64 leaves high bands
     # all-zero — one corpus-wide bucket, quadratic candidates at scale
-    # (see _banded_hamming_pairs)
+    # (see _hamming_banding)
     return _banded_hamming_pairs(
         h, "ehash", id_col, max_hamming, bands, "clip_a", "clip_b",
         hash_bits=hash_bits,
@@ -708,61 +716,30 @@ def incremental_hamming_neardup_filter(
     """Incremental near-dup against a MAINTAINED fingerprint index:
     return the ``new_hashes`` rows whose hash is NOT within
     ``max_hamming`` of any indexed hash. Generic over 64-bit
-    fingerprints — the image-dHash and audio-energy-hash paths share it
-    (same pigeonhole-exact banding as :func:`_banded_hamming_pairs`).
-    Per-ingest cost is O(new + collisions): candidates come from the
-    band equi-join against the stored index, never a history rescan —
-    the media twin of dedup.py's text/embedding incremental filters."""
-    if bands <= max_hamming:
-        raise ValueError(
-            f"bands={bands} must exceed max_hamming={max_hamming} for the "
-            "pigeonhole recall guarantee"
-        )
-    if hash_bits < bands or hash_bits > 64:
-        raise ValueError(
-            f"hash_bits={hash_bits} must lie in [bands={bands}, 64]"
-        )
-    # balanced-split the LIVE bit-width (see _band_slices: banding a
-    # short fingerprint over the storage width — or a uniform ceil
-    # width past the live bits — leaves a band all-zero: one index-wide
-    # bucket, quadratic per ingest)
-    slices = _band_slices(hash_bits, bands)
-
-    def stack(df: DataFrame, name: str, h: str) -> DataFrame:
-        return df.select(
-            F.col(id_col).alias(name),
-            F.col(hash_col).alias(h),
-            F.posexplode(
-                F.array(
-                    *[
-                        F.shiftright(F.col(hash_col), shift).bitwiseAND(
-                            F.lit(mask)
-                        )
-                        for shift, mask in slices
-                    ]
-                )
-            ).alias("band_idx", "band_val"),
-        )
-
-    # Collapse BOTH sides to DISTINCT hash values before banding: the
-    # drop decision depends only on the fingerprint, so rows sharing a
-    # hash share one verdict — and the banded join's candidate mass
-    # becomes quadratic in DISTINCT fingerprints, not rows. Found by the
-    # r10 100x ingest replay: a synthesized corpus whose 50k images all
-    # shared one dHash put the whole batch in one band bucket (~180s per
-    # micro-batch of pure duplicate-pair enumeration); after the
-    # collapse the same adversarial corpus is one banded row.
-    new_d = new_hashes.select(hash_col).distinct().withColumn(id_col, F.col(hash_col))
-    old_d = index_hashes.select(hash_col).distinct().withColumn(id_col, F.col(hash_col))
-    new = stack(new_d, "hn_key", "hn")
-    old = stack(old_d, "ho_key", "ho")
+    fingerprints — the image-dHash and audio-energy-hash paths share it.
+    The banding contract is :func:`_hamming_banding`'s and candidates
+    are the ``dedup._band_join`` of the two :func:`_hamming_stack` sides,
+    as in :func:`_banded_hamming_pairs`. Per-ingest cost is
+    O(new + collisions): candidates come from the band equi-join against
+    the stored index, never a history rescan — the media member of the
+    incremental filters beside dedup.py's text and embedding ones."""
+    slices = _hamming_banding(max_hamming, bands, hash_bits)
+    # Collapse BOTH sides to DISTINCT hash values before banding, each
+    # hash its own id: the drop decision depends only on the
+    # fingerprint, so rows sharing a hash share one verdict — and the
+    # banded join's candidate mass becomes quadratic in DISTINCT
+    # fingerprints, not rows. Found by the r10 100x ingest replay: a
+    # synthesized corpus whose 50k images all shared one dHash put the
+    # whole batch in one band bucket (~180s per micro-batch of pure
+    # duplicate-pair enumeration); after the collapse the same
+    # adversarial corpus is one banded row.
+    new, old = (
+        _hamming_stack(h.select(hash_col).distinct(), hash_col, slices, hash_col)
+        for h in (new_hashes, index_hashes)
+    )
     dup_hashes = (
-        new.join(old, ["band_idx", "band_val"])
-        .select("hn", "ho")
-        .distinct()
-        .filter(
-            F.bit_count(F.col("hn").bitwiseXOR(F.col("ho"))) <= max_hamming
-        )
+        _band_join(new, old, hash_col, key="band_val", carry=(), out=("hn", "ho"))
+        .filter(F.bit_count(F.col("hn").bitwiseXOR(F.col("ho"))) <= max_hamming)
         .select(F.col("hn").alias(hash_col))
         .distinct()
     )
@@ -919,9 +896,10 @@ def image_neardup_pairs(
     the (band_idx, band_val) equi-join generates every qualifying pair
     (recall 1, this is exact blocking, not LSH) and verification is just
     ``bit_count(xor) <= max_hamming`` on the candidates. At corpus scale
-    this is the same posture as the minhash band join: candidates from
-    an equi-join, never all-pairs. Output: (img_a, img_b, hamming) with
-    img_a < img_b.
+    this is the same posture as the minhash band join — the same
+    ``dedup._band_join``, via :func:`_banded_hamming_pairs`: candidates
+    from an equi-join, never all-pairs. Output: (img_a, img_b, hamming)
+    with img_a < img_b.
     """
     h = image_dhash(media, id_col=id_col, payload_col=payload_col)
     return _banded_hamming_pairs(
@@ -934,12 +912,12 @@ def _band_slices(hash_bits: int, bands: int) -> list:
     """Balanced (shift, mask) slices covering bits [0, hash_bits):
     the first ``hash_bits % bands`` bands get ``hash_bits // bands + 1``
     bits, the rest ``hash_bits // bands``. Every band is NON-EMPTY
-    (hash_bits >= bands is validated by callers) — a uniform ceil width
-    can leave the last band entirely past the live bits (e.g.
-    hash_bits=4, bands=3 -> band 2 covers bits 4-5, identically zero),
-    silently reintroducing the one-bucket quadratic the live-bit
-    banding exists to kill. Disjoint + covering + bands > max_hamming
-    keeps the pigeonhole recall-1 guarantee."""
+    (hash_bits >= bands is validated by :func:`_hamming_banding`) — a
+    uniform ceil width can leave the last band entirely past the live
+    bits (e.g. hash_bits=4, bands=3 -> band 2 covers bits 4-5,
+    identically zero), silently reintroducing the one-bucket quadratic
+    the live-bit banding exists to kill. Disjoint + covering + bands >
+    max_hamming keeps the pigeonhole recall-1 guarantee."""
     base, rem = divmod(hash_bits, bands)
     slices, shift = [], 0
     for b in range(bands):
@@ -947,6 +925,53 @@ def _band_slices(hash_bits: int, bands: int) -> list:
         slices.append((shift, (1 << width) - 1))
         shift += width
     return slices
+
+
+def _hamming_banding(max_hamming: int, bands: int, hash_bits: int) -> list:
+    """The banding contract of the Hamming family: ``bands`` contiguous
+    bit bands over the fingerprint's ``hash_bits`` LIVE bits, with
+    0 <= max_hamming < bands <= hash_bits <= 64. Then by pigeonhole
+    every pair within ``max_hamming`` agrees exactly on at least one
+    band, so the band equi-join has recall 1 (exact blocking, not LSH);
+    anything else is a ValueError. Returns the :func:`_band_slices`.
+
+    ``hash_bits`` MUST be the live bit-width. Banding a 31-bit hash over
+    64 bits leaves the high band identically zero, so that band's
+    equi-join holds the ENTIRE corpus in one bucket and the candidate
+    stream quadruples with every data doubling — found as a 100x-scale
+    hang (c52: 125B candidate pairs), invisible at small SF where n^2/2
+    of a dead band still fits in a second. Pigeonhole needs only that
+    the bands COVER the live bits, so the balanced split over
+    ``hash_bits`` preserves recall 1."""
+    if max_hamming < 0:
+        raise ValueError(f"max_hamming={max_hamming} must be >= 0")
+    if bands <= max_hamming:
+        raise ValueError(
+            f"bands={bands} must exceed max_hamming={max_hamming} for the "
+            "pigeonhole recall guarantee"
+        )
+    if hash_bits < bands or hash_bits > 64:
+        raise ValueError(
+            f"hash_bits={hash_bits} must lie in [bands={bands}, 64]"
+        )
+    return _band_slices(hash_bits, bands)
+
+
+def _hamming_stack(hashes: DataFrame, hash_col: str, slices: list, *cols: str) -> DataFrame:
+    """(*cols, band_idx, band_val): one row per ``hashes`` row and band,
+    band b's value the bits of ``hash_col`` under slice b of ``slices``
+    (:func:`_hamming_banding`)."""
+    return hashes.select(
+        *cols,
+        F.posexplode(
+            F.array(
+                *[
+                    F.shiftright(F.col(hash_col), shift).bitwiseAND(F.lit(mask))
+                    for shift, mask in slices
+                ]
+            )
+        ).alias("band_idx", "band_val"),
+    )
 
 
 def _banded_hamming_pairs(
@@ -960,30 +985,13 @@ def _banded_hamming_pairs(
     hash_bits: int = 64,
 ) -> DataFrame:
     """EXACT Hamming-bounded pairs over a hash column via banded
-    blocking: with ``bands > max_hamming``, pigeonhole guarantees every
-    qualifying pair agrees exactly on at least one contiguous bit band —
-    candidates come from the (band_idx, band_val) equi-join, never
+    blocking (contract: :func:`_hamming_banding`): candidates are the
+    ``dedup._band_join`` self-join of the :func:`_hamming_stack`, never
     all-pairs, and verification is ``bit_count(xor) <= max_hamming``.
-    Shared by the image-dHash and audio-energy-hash near-dup paths.
-
-    ``hash_bits`` MUST be the fingerprint's LIVE bit-width. Banding a
-    31-bit hash over 64 bits leaves the high band identically zero, so
-    that band's equi-join holds the ENTIRE corpus in one bucket and the
-    candidate stream quadruples with every data doubling — found as a
-    100x-scale hang (c52: 125B candidate pairs), invisible at small SF
-    where n^2/2 of a dead band still fits in a second. Pigeonhole
-    needs only that the bands COVER the live bits, so the ceil-split
-    over ``hash_bits`` preserves recall 1."""
-    if bands <= max_hamming:
-        raise ValueError(
-            f"bands={bands} must exceed max_hamming={max_hamming} for the "
-            "pigeonhole recall guarantee"
-        )
-    if hash_bits < bands or hash_bits > 64:
-        raise ValueError(
-            f"hash_bits={hash_bits} must lie in [bands={bands}, 64]"
-        )
-    slices = _band_slices(hash_bits, bands)  # balanced: no dead band
+    Shared by the image-dHash and audio-energy-hash near-dup paths and
+    the media ingest's intra-batch step. Output: (a_name, b_name,
+    hamming) with a_name < b_name."""
+    slices = _hamming_banding(max_hamming, bands, hash_bits)
     # Lazy checkpoint pins ONE materialization of the (id, hash) frame
     # — tiny (16 bytes/row) — before it fans out to both join sides.
     # Without it each side re-derives the hash from its upstream plan,
@@ -994,33 +1002,16 @@ def _banded_hamming_pairs(
     hashes = hashes.select(F.col(id_col), F.col(hash_col)).localCheckpoint(
         eager=False
     )
-    stacked = hashes.select(
-        F.col(id_col),
-        F.col(hash_col).alias("__h"),
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright(F.col(hash_col), shift).bitwiseAND(F.lit(mask))
-                    for shift, mask in slices
-                ]
-            )
-        ).alias("band_idx", "band_val"),
-    )
-    left = stacked.select(
-        F.col(id_col).alias(a_name), F.col("__h").alias("ha"), "band_idx", "band_val"
-    )
-    right = stacked.select(
-        F.col(id_col).alias(b_name), F.col("__h").alias("hb"), "band_idx", "band_val"
-    )
+    stacked = _hamming_stack(hashes, hash_col, slices, id_col, hash_col)
     return (
-        left.join(right, ["band_idx", "band_val"])
-        .filter(F.col(a_name) < F.col(b_name))
-        .select(a_name, b_name, "ha", "hb")
-        .distinct()
+        _band_join(
+            stacked, stacked, id_col, F.col(a_name) < F.col(b_name),
+            key="band_val", carry=((hash_col, "h"),), out=(a_name, b_name),
+        )
         .select(
             a_name,
             b_name,
-            F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))).alias("hamming"),
+            F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b"))).alias("hamming"),
         )
         .filter(F.col("hamming") <= max_hamming)
     )

@@ -31,7 +31,11 @@ from pyspark.sql import types as T
 
 from sheetsetl_spark.cache import cache_scope, scoped_persist
 from sheetsetl_spark.operators.dedup import (
+    _planes_per_band,
     _rows_per_band,
+    embedding_band_index,
+    embedding_neardup_pairs,
+    incremental_embedding_neardup_filter,
     incremental_neardup_filter,
     incremental_neardup_filter_sig,
     minhash_band_table,
@@ -511,13 +515,18 @@ class EmbeddingDedupIngestForeachBatch:
     O(new + collisions) with no history rescan.
 
     Intra-batch near-dups resolve smaller-id-wins via the batch-local
-    pair finder (the batch is small; its band join is cheap). History
+    pair finder (the batch is small; its band join is cheap), whose
+    persisted signature frame is released when the call returns
+    (``cache.cache_scope()``). Both
+    steps use the hyperplane stack and the shared band join of
+    operators/dedup.py (``_hyperplane_stack``, ``_band_join``). History
     and index are both batch stores (:func:`_write_batch`).
 
-    Banding is PINNED at construction (default 32/4): the stored index
-    must be self-consistent across batches — per-batch auto-derivation
-    would mix band widths inside one index and break the equi-join.
-    Size it for the EXPECTED final corpus up front, e.g.
+    Banding is PINNED at construction (default 32/4) and checked there
+    (``dedup._planes_per_band``), before anything is written: the stored
+    index must be self-consistent across batches — per-batch
+    auto-derivation would mix band widths inside one index and break
+    the equi-join. Size it for the EXPECTED final corpus up front, e.g.
     ``num_planes, bands = dedup.choose_banding(expected_corpus_rows)``
     (the r9-measured value-space law: 8-bit bands die at ~200k
     vectors); re-banding an existing index means rebuilding it."""
@@ -534,6 +543,7 @@ class EmbeddingDedupIngestForeachBatch:
         vec_col: str = "embedding",
         max_bucket_size: int | None = None,
     ):
+        _planes_per_band(num_planes, bands)
         self.history_dir = history_dir
         self.index_dir = index_dir
         self.threshold = threshold
@@ -546,41 +556,33 @@ class EmbeddingDedupIngestForeachBatch:
         self.batches_seen: list[int] = []
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        from sheetsetl_spark.operators.dedup import (
-            embedding_band_index,
-            embedding_neardup_pairs,
-            incremental_embedding_neardup_filter,
-        )
-
         self.batches_seen.append(batch_id)
-
-        # intra-batch near-dups: smaller id wins
-        intra = embedding_neardup_pairs(
-            batch_df, threshold=self.threshold, num_planes=self.num_planes,
-            bands=self.bands, dim=self.dim, id_col=self.id_col,
-            vec_col=self.vec_col,
-        )
-        new_vecs = batch_df.join(
-            intra.select(F.col("vec_b").alias(self.id_col)).distinct(),
-            self.id_col, "left_anti",
-        )
-
-        index = _read_store(batch_df.sparkSession, self.index_dir, batch_id)
-        if index is not None:
-            new_vecs = incremental_embedding_neardup_filter(
-                new_vecs, index,
-                threshold=self.threshold, num_planes=self.num_planes,
+        with cache_scope():
+            # intra-batch near-dups: smaller id wins
+            intra = embedding_neardup_pairs(
+                batch_df, threshold=self.threshold, num_planes=self.num_planes,
                 bands=self.bands, dim=self.dim, id_col=self.id_col,
-                vec_col=self.vec_col, max_bucket_size=self.max_bucket_size,
+                vec_col=self.vec_col,
             )
-
-        _write_indexed_batch(
-            new_vecs, batch_id, self.history_dir, self.index_dir,
-            lambda survivors: embedding_band_index(
-                survivors, num_planes=self.num_planes, bands=self.bands,
-                dim=self.dim, id_col=self.id_col, vec_col=self.vec_col,
-            ),
-        )
+            new_vecs = batch_df.join(
+                intra.select(F.col("vec_b").alias(self.id_col)).distinct(),
+                self.id_col, "left_anti",
+            )
+            index = _read_store(batch_df.sparkSession, self.index_dir, batch_id)
+            if index is not None:
+                new_vecs = incremental_embedding_neardup_filter(
+                    new_vecs, index,
+                    threshold=self.threshold, num_planes=self.num_planes,
+                    bands=self.bands, dim=self.dim, id_col=self.id_col,
+                    vec_col=self.vec_col, max_bucket_size=self.max_bucket_size,
+                )
+            _write_indexed_batch(
+                new_vecs, batch_id, self.history_dir, self.index_dir,
+                lambda survivors: embedding_band_index(
+                    survivors, num_planes=self.num_planes, bands=self.bands,
+                    dim=self.dim, id_col=self.id_col, vec_col=self.vec_col,
+                ),
+            )
 
 
 def _live_bits(df: DataFrame, hash_col: str) -> int:
@@ -611,12 +613,16 @@ class MediaDedupIngestForeachBatch:
     a media micro-batch to (id, ..., hash) rows — default
     ``multimodal.image_dhash``; pass ``audio_energy_hash`` (or any
     64-bit fingerprinting stage) for other modalities. Each batch is
-    fingerprinted once; intra-batch and batch-vs-index near-dups drop
-    via the pigeonhole-exact banded Hamming join
-    (multimodal.incremental_hamming_neardup_filter); survivors' media
-    rows append to history and their HASHES (not payloads) to the
-    index, so the index stays tiny however large the media bytes are.
-    History and index are both batch stores (:func:`_write_batch`)."""
+    fingerprinted once; intra-batch (multimodal._banded_hamming_pairs)
+    and batch-vs-index (multimodal.incremental_hamming_neardup_filter)
+    near-dups drop via the Hamming stack and the shared band join of
+    operators/dedup.py (``_band_join``), pigeonhole-exact; survivors'
+    media rows append to history and their HASHES (not payloads) to
+    the index, so the index stays tiny however large the media bytes
+    are. The banding (``multimodal._hamming_banding``: 0 <= max_hamming
+    < bands <= hash_bits <= 64, hash_bits=None checked as 64) is
+    checked at construction, before anything is written. History and
+    index are both batch stores (:func:`_write_batch`)."""
 
     def __init__(
         self,
@@ -629,6 +635,9 @@ class MediaDedupIngestForeachBatch:
         id_col: str = "media_id",
         hash_bits: int | None = None,
     ):
+        from sheetsetl_spark.operators.multimodal import _hamming_banding
+
+        _hamming_banding(max_hamming, bands, 64 if hash_bits is None else hash_bits)
         self.history_dir = history_dir
         self.index_dir = index_dir
         self.fingerprint_fn = fingerprint_fn

@@ -820,6 +820,15 @@ def test_minhash_lsh_reuses_cached_shingle_stream(spark):
         ("incremental_neardup_filter", {"num_hashes": 30, "bands": 8}, "bands"),
         ("incremental_neardup_filter", {"bands": 0}, "bands"),
         ("minhash_band_table", {"bands": 0}, "bands"),
+        ("embedding_neardup_pairs", {"bands": 0}, "bands"),
+        ("embedding_band_index", {"bands": 0}, "bands"),
+        ("embedding_neardup_pairs", {"num_planes": 0}, "num_planes"),
+        ("embedding_band_index", {"num_planes": 0}, "num_planes"),
+        ("embedding_neardup_pairs", {"num_planes": -4}, "num_planes"),
+        ("incremental_embedding_neardup_filter", {"num_planes": 32, "bands": 0}, "bands"),
+        ("_banded_hamming_pairs", {"max_hamming": -1, "bands": 0}, "max_hamming"),
+        ("incremental_hamming_neardup_filter", {"max_hamming": -1, "bands": 0}, "max_hamming"),
+        ("_banded_hamming_pairs", {"max_hamming": -1, "bands": 2}, "max_hamming"),
     ],
 )
 def test_similarity_joins_reject_degenerate_parameters(spark, op, kwargs, match):
@@ -830,10 +839,17 @@ def test_similarity_joins_reject_degenerate_parameters(spark, op, kwargs, match)
     docs = spark.createDataFrame(
         [(0, "a b c d"), (1, "a b c e"), (2, "x y z w")], "doc_id long, text string"
     )
-    # the incremental filter takes the history corpus as a second frame
-    args = (docs, docs) if op == "incremental_neardup_filter" else (docs,)
+    # the incremental filters take history (or its index) as a second
+    # frame; the banding is refused before any column is read
+    args = (docs, docs) if op.startswith("incremental_") else (docs,)
+    module = dedup
+    if "hamming" in op:
+        module = multimodal
+        kwargs = {"hash_col": "doc_id", "id_col": "doc_id", **kwargs}
+        if op == "_banded_hamming_pairs":
+            kwargs = {**kwargs, "a_name": "a", "b_name": "b"}
     with pytest.raises(ValueError, match=match):
-        getattr(dedup, op)(*args, **kwargs)
+        getattr(module, op)(*args, **kwargs)
 
 
 def test_gopher_flags_zero_shuffle_and_rules(spark):

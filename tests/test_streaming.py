@@ -272,6 +272,48 @@ def test_dedup_ingests_reject_bad_banding_at_construction(tmp_path, banding):
     assert not (tmp_path / "history").exists() and not (tmp_path / "index").exists()
 
 
+@pytest.mark.parametrize(
+    "ingest, banding, match",
+    [
+        ("EmbeddingDedupIngestForeachBatch", {"bands": 0}, "bands"),
+        ("EmbeddingDedupIngestForeachBatch", {"num_planes": 30, "bands": 4}, "bands"),
+        ("EmbeddingDedupIngestForeachBatch", {"num_planes": 0}, "num_planes"),
+        ("MediaDedupIngestForeachBatch", {"bands": 1, "max_hamming": 1}, "pigeonhole"),
+        ("MediaDedupIngestForeachBatch", {"max_hamming": -1}, "max_hamming"),
+        ("MediaDedupIngestForeachBatch", {"bands": 4, "hash_bits": 3}, "hash_bits"),
+    ],
+)
+def test_vector_and_media_ingests_reject_bad_banding_at_construction(
+    tmp_path, ingest, banding, match
+):
+    """A banding the hyperplane or Hamming family refuses fails when the
+    ingest is built, before any batch is written: neither store
+    directory is created."""
+    from sheetsetl_spark import streaming
+
+    with pytest.raises(ValueError, match=match):
+        getattr(streaming, ingest)(
+            str(tmp_path / "history"), str(tmp_path / "index"), **banding
+        )
+    assert not any(tmp_path.iterdir())
+
+
+def test_embedding_ingest_leaves_no_cache_entries(spark, tmp_path):
+    """The embedding ingest's intra-batch pair finder persists the
+    batch's signature frame; the call releases it, so after every
+    micro-batch (a replay included) the session's cache manager is
+    empty instead of holding one entry per batch."""
+    from sheetsetl_spark.streaming import EmbeddingDedupIngestForeachBatch
+
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    ingest = EmbeddingDedupIngestForeachBatch(str(tmp_path / "h"), str(tmp_path / "i"), dim=4)
+    for b in (0, 1, 1):
+        rows = [(b * 10 + i, [float(i == j) + b for j in range(4)]) for i in range(4)]
+        ingest(spark.createDataFrame(rows, "vec_id long, embedding array<double>"), b)
+        assert cache_manager.isEmpty(), b
+
+
 def test_dedup_ingests_leave_no_cache_entries(spark, tmp_path):
     """The text-dedup ingests persist shingle streams and signature
     frames inside each call and unpersist them when it returns: after
