@@ -11,15 +11,15 @@ only O(candidate) stage and AQE's skew-join splits hot buckets.
 Banded near-dup is filter-and-verify: candidates come only from
 :func:`_band_join`, the (band_idx, band key) equi-join of two band
 stacks, and only its distinct colliding pairs are verified. Each family
-keeps just its validator, its band stack and its verify step:
+keeps just its validator, its band stack and its verify step; MinHash
+and hyperplane share one validator, :func:`_rows_per_band`:
 
-* MinHash (text Jaccard): :func:`_rows_per_band`, :func:`_band_stack`
-  keyed ``band_hash``; exact Jaccard over shingle arrays
-  (:func:`_array_jaccard_pairs`) or the signature-agreement estimate
+* MinHash (text Jaccard): :func:`_band_stack` keyed ``band_hash``;
+  exact Jaccard over shingle arrays (:func:`_array_jaccard_pairs`) or
+  the signature-agreement estimate
   (:func:`incremental_neardup_filter_sig`).
-* Hyperplane (embedding cosine): :func:`_planes_per_band`,
-  :func:`_hyperplane_stack` keyed ``band_val``; exact cosine
-  (:func:`_cosine_pairs`).
+* Hyperplane (embedding cosine): :func:`_hyperplane_stack` keyed
+  ``band_val``; exact cosine (:func:`_cosine_pairs`).
 * Hamming (media fingerprints, ``operators/multimodal.py``):
   ``_hamming_banding``, ``_hamming_stack`` keyed ``band_val``;
   ``bit_count(xor) <= max_hamming``.
@@ -326,15 +326,16 @@ def minhash_signatures(
     return sh.groupBy(id_col).agg(*mins)
 
 
-def _rows_per_band(num_hashes: int, bands: int) -> int:
-    """The banding contract of every MinHash entry point: the
-    ``num_hashes`` signature components split into ``bands`` >= 1 bands
-    of r = num_hashes / bands rows, so ``bands`` must divide
+def _rows_per_band(num_hashes: int, bands: int, label: str = "num_hashes") -> int:
+    """The banding contract of the MinHash and hyperplane families: the
+    ``num_hashes`` signature components (hyperplane bits, named
+    ``label`` in the error) split into ``bands`` >= 1 bands of
+    r = num_hashes / bands rows, so ``bands`` must divide
     ``num_hashes`` >= 1; anything else is a ValueError. Returns r."""
     if bands < 1 or num_hashes < 1 or num_hashes % bands:
         raise ValueError(
-            f"bands must be >= 1 and divide num_hashes >= 1, "
-            f"got num_hashes={num_hashes}, bands={bands}"
+            f"bands must be >= 1 and divide {label} >= 1, "
+            f"got {label}={num_hashes}, bands={bands}"
         )
     return num_hashes // bands
 
@@ -480,10 +481,11 @@ def _band_join(
     ``pair_filter`` (over the output names) holds. Each ``(col, name)``
     of ``carry`` rides from both sides as ``name_a``, ``name_b``; the
     default is the MinHash stack's ``n_sh``. A carried array rides
-    through the join's shuffle and ``distinct`` once per colliding band,
-    so the verify steps fetch wide arrays for the distinct pairs
-    afterwards; :func:`incremental_embedding_neardup_filter` says why
-    it does not."""
+    through the join's shuffle and ``distinct`` once per colliding band:
+    the exact-Jaccard verify fetches its shingle arrays for the distinct
+    pairs afterwards (:func:`_array_jaccard_pairs`), while the
+    incremental embedding and signature filters carry theirs (each says
+    why)."""
     left, right = (
         stack.select(
             F.col(id_col).alias(o),
@@ -724,19 +726,6 @@ def choose_banding(n_rows: int, bands: int = 4) -> tuple[int, int]:
     return width * bands, bands
 
 
-def _planes_per_band(num_planes: int, bands: int) -> int:
-    """The banding contract of the hyperplane family: the ``num_planes``
-    signature bits split into ``bands`` >= 1 bands of equal width, so
-    ``bands`` must divide ``num_planes`` >= 1; anything else is a
-    ValueError. Returns the band width in bits."""
-    if bands < 1 or num_planes < 1 or num_planes % bands:
-        raise ValueError(
-            f"bands must be >= 1 and divide num_planes >= 1, "
-            f"got num_planes={num_planes}, bands={bands}"
-        )
-    return num_planes // bands
-
-
 def _hyperplane_signatures(
     vectors: DataFrame,
     num_planes: int | None,
@@ -752,7 +741,7 @@ def _hyperplane_signatures(
     vector) and the resolved banding. ``num_planes=None`` takes
     :func:`choose_banding` of ``n_rows``, or of a ``count()`` of
     ``vectors`` when that is None too; the banding must pass
-    :func:`_planes_per_band`. The projection is num_planes x dim
+    :func:`_rows_per_band`. The projection is num_planes x dim
     interpreted multiply-adds per vector, the compute-dense case
     ``skew.widen_to_cores`` exists for (a compact corpus parquet exposes
     1-8 row groups), so the vectors are widened first."""
@@ -760,7 +749,7 @@ def _hyperplane_signatures(
         num_planes, bands = choose_banding(
             n_rows if n_rows is not None else vectors.count(), bands
         )
-    width = _planes_per_band(num_planes, bands)
+    width = _rows_per_band(num_planes, bands, "num_planes")
     from sheetsetl_spark.operators.skew import widen_to_cores
 
     sig = _embedding_signatures(
@@ -833,7 +822,7 @@ def embedding_neardup_pairs(
     the pre-law default was a fixed 32/4 — >20k-row callers now get
     wider bands and thus slightly lower per-band recall (measured
     >0.99 at threshold 0.98; re-check if your threshold is looser).
-    Either way the banding must pass :func:`_planes_per_band`.
+    Either way the banding must pass :func:`_rows_per_band`.
 
     Candidates are the :func:`_band_join` self-join of the
     :func:`_hyperplane_stack`; each distinct pair then fetches its two
@@ -1454,9 +1443,11 @@ def incremental_neardup_filter_sig(
     ~sqrt(J(1-J)/num_hashes); raise num_hashes to tighten.
 
     Candidates are the :func:`_band_join` of the batch's own band table
-    against the stored one; the agreement is computed only for the
-    distinct colliding id pairs, each fetching its two signatures from
-    its table's band-0 row (every indexed document has one).
+    against the stored one, each side's ``sig`` carried through it, so
+    every pair is scored with the signatures of the two rows that
+    collided even where an id repeats. Deduplicating ids first and
+    fetching the signatures from each table's band-0 row afterwards
+    reads the stored index twice and was no faster (CHANGES.md).
 
     Returns the surviving new-batch rows."""
     new_bands = minhash_band_table(
@@ -1464,16 +1455,9 @@ def incremental_neardup_filter_sig(
         id_col=id_col, text_col=text_col, max_shingle_df=max_shingle_df,
         hash_family=hash_family,
     )
-    old_bands = band_table
     if max_bucket_size is not None:
-        old_bands = _drop_hot_keys(band_table, ["band_idx", "band_hash"], max_bucket_size)
-    candidates = _band_join(new_bands, old_bands, id_col, carry=())
-    a, b = (
-        side.filter(F.col("band_idx") == 0).select(
-            F.col(id_col).alias(f"doc_{s}"), F.col("sig").alias(f"sig_{s}")
-        )
-        for s, side in (("a", new_bands), ("b", band_table))
-    )
+        band_table = _drop_hot_keys(band_table, ["band_idx", "band_hash"], max_bucket_size)
+    candidates = _band_join(new_bands, band_table, id_col, carry=(("sig", "sig"),))
     agreement = F.size(
         F.filter(
             F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
@@ -1481,9 +1465,7 @@ def incremental_neardup_filter_sig(
         )
     ) / F.lit(num_hashes)
     dups = (
-        candidates.join(a, "doc_a")
-        .join(b, "doc_b")
-        .filter(agreement >= threshold)
+        candidates.filter(agreement >= threshold)
         .select(F.col("doc_a").alias(id_col))
         .distinct()
     )

@@ -31,7 +31,6 @@ from pyspark.sql import types as T
 
 from sheetsetl_spark.cache import cache_scope, scoped_persist
 from sheetsetl_spark.operators.dedup import (
-    _planes_per_band,
     _rows_per_band,
     embedding_band_index,
     embedding_neardup_pairs,
@@ -523,7 +522,7 @@ class EmbeddingDedupIngestForeachBatch:
     and index are both batch stores (:func:`_write_batch`).
 
     Banding is PINNED at construction (default 32/4) and checked there
-    (``dedup._planes_per_band``), before anything is written: the stored
+    (``dedup._rows_per_band``), before anything is written: the stored
     index must be self-consistent across batches — per-batch
     auto-derivation would mix band widths inside one index and break
     the equi-join. Size it for the EXPECTED final corpus up front, e.g.
@@ -543,7 +542,7 @@ class EmbeddingDedupIngestForeachBatch:
         vec_col: str = "embedding",
         max_bucket_size: int | None = None,
     ):
-        _planes_per_band(num_planes, bands)
+        _rows_per_band(num_planes, bands, "num_planes")
         self.history_dir = history_dir
         self.index_dir = index_dir
         self.threshold = threshold

@@ -6,7 +6,9 @@ hyperplane, Hamming; operators/dedup.py module docstring).
   with the same banding, pairs with a history row.
 * Plan shape: the banded registry queries never plan an all-pairs join,
   and every candidate join is keyed on band_idx plus the family's band
-  key."""
+  key.
+* The signature-estimate filter scores each candidate with the
+  signatures of the rows that collided, even where an id repeats."""
 
 from __future__ import annotations
 
@@ -91,6 +93,41 @@ def test_hamming_incremental_filter_matches_pair_finder(spark):
     new_ids = {i for i, _ in new}
     kept = multimodal.incremental_hamming_neardup_filter(batch, history, **banding)
     _assert_consistent(kept, "media_id", new_ids, _dropped_by_pairs(pairs, "m_a", "m_b", new_ids))
+
+
+def test_signature_filter_scores_the_rows_that_collided(spark):
+    """Two index rows share id 1: one collides with the new document on a
+    whole band but agrees on 4 of 32 components, the other agrees on 16
+    of 32 (the 0.5 threshold) but on no whole band. The estimate scores
+    only the row that collided, so the document is kept; when the
+    colliding row itself agrees on 16, it is dropped."""
+    new = spark.createDataFrame(
+        [(7, "the quick brown fox jumps over the lazy dog")], "doc_id long, text string"
+    )
+    new_bands = dedup.minhash_band_table(new, max_shingle_df=None).collect()
+    sig = new_bands[0]["sig"]
+    band0 = next(r["band_hash"] for r in new_bands if r["band_idx"] == 0)
+    one_band = sig[:4] + [x + 1 for x in sig[4:]]
+    half_of_each = [x if j % 4 < 2 else x + 1 for j, x in enumerate(sig)]
+    taken = {r["band_hash"] for r in new_bands}
+    fresh = iter(h for h in range(1, 100) if h not in taken)
+
+    def index(colliding_sig):
+        rows = [(1, colliding_sig, 0, band0)]
+        rows += [(1, colliding_sig, b, next(fresh)) for b in range(1, 8)]
+        rows += [(1, half_of_each, b, next(fresh)) for b in range(8)]
+        return spark.createDataFrame(
+            rows, "doc_id long, sig array<long>, band_idx int, band_hash long"
+        )
+
+    def kept(colliding_sig):
+        out = dedup.incremental_neardup_filter_sig(
+            new, index(colliding_sig), threshold=0.5, max_shingle_df=None
+        )
+        return [r["doc_id"] for r in out.collect()]
+
+    assert kept(one_band) == [7]
+    assert kept(half_of_each) == []
 
 
 _JOIN_KEYS = re.compile(r"(?:SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin) \[([^\]]*)\], \[([^\]]*)\]")
