@@ -13,13 +13,15 @@ What changes Spark-side depends on where the sink builds its output.
 A sink that builds it on the driver (the Sheets upload, ``collects =
 True``) gets one bounded collect per query: the guard collects at most
 one row past the largest count the cell limit allows, as Arrow, rejects
-on the same rule, and the sink publishes exactly those rows without
-running the query again. A sink that writes from the executors (the
-directory sinks, temp views) gets a count and then writes the
-query's own frame, so no result passes through driver memory; the
-query runs twice there. Collecting for them was measured: a near-limit
-result of long strings killed the driver JVM (OutOfMemoryError) and
-with it the rest of the run, where the distributed write publishes it.
+on the same rule, and hands those rows to the sink (``rows=``), which
+renders them on the driver. The query runs once and the rows never go
+back into the JVM; only a ``validate`` hook gets a frame rebuilt from
+them. A sink that writes from the executors (the directory sinks, temp
+views) gets a count and then writes the query's own frame, so no result
+passes through driver memory; the query runs twice there. Collecting
+for them was measured: a near-limit result of long strings killed the
+driver JVM (OutOfMemoryError) and with it the rest of the run, where the
+distributed write publishes it.
 """
 
 from __future__ import annotations
@@ -107,12 +109,14 @@ class SqlFolderPipeline:
     ``cell_limit`` (>= 1) is the reference's 2M-cell sheet cap. For a
     sink with ``collects = True`` it also bounds the rows each file
     collects to the driver: the result is collected once by the guard and
-    published from there.
+    the sink publishes those rows.
 
     ``validate`` (optional) is a ``(name, df) -> None`` hook called after
-    the cell guard, on the frame the sink will get, and BEFORE the sink — raise
-    :class:`ValidationFailed` (or return normally) to gate publishing on
-    data-quality contracts
+    the cell guard and BEFORE the sink, on the rows the sink will publish:
+    the query's own frame, or for a collecting sink a frame over the
+    collected rows (``spark.createDataFrame``), so the query still runs
+    once. Raise :class:`ValidationFailed` (or return normally) to gate
+    publishing on data-quality contracts
     (e.g. ``operators/quality_checks.py::check_constraints``); a failure
     records ``validation_error`` and skips only that file. The reference
     publishes whatever MySQL returns (loader.py:238-246) — this is the
@@ -195,6 +199,7 @@ class SqlFolderPipeline:
         try:
             if collects:  # the query's only execution: the sink gets these rows
                 table = cell_count_guard(df, qf.name, self.cell_limit)
+                rows = table.num_rows
             else:  # the sink writes df from the executors
                 rows = cell_limit_count(df, qf.name, self.cell_limit)
         except CellLimitExceeded as exc:  # loader.py:250-253
@@ -203,17 +208,18 @@ class SqlFolderPipeline:
         except Exception as exc:  # runtime error (raise_error, ANSI cast...) -> skip file
             logger.exception("SQL error in %s", qf.name)
             return QueryResult(qf.name, "sql_error", error=str(exc))
-        if collects:
-            rows = table.num_rows
-            df = self.spark.createDataFrame(table, schema=df.schema)
         if self.validate is not None:
             try:
-                self.validate(qf.name, df)
+                frame = self.spark.createDataFrame(table, schema=df.schema) if collects else df
+                self.validate(qf.name, frame)
             except Exception as exc:  # contract failure -> skip this file
                 logger.error("Validation failed for %s: %s", qf.name, exc)
                 return QueryResult(qf.name, "validation_error", rows=rows, error=str(exc))
         try:
-            self.sink.write(df, qf.name)
+            if collects:
+                self.sink.write(df, qf.name, rows=table)
+            else:
+                self.sink.write(df, qf.name)
         except Exception as exc:  # sink error -> skip file (loader.py:184-186)
             logger.exception("Sink error for %s", qf.name)
             return QueryResult(qf.name, "sink_error", rows=rows, error=str(exc))

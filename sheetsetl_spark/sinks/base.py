@@ -78,10 +78,12 @@ class Sink(Protocol):
     loader.py:159-179's (folder, name, mime) lookup).
 
     A sink that builds its whole output on the driver (the Sheets upload)
-    sets a class attribute ``collects = True``: the pipeline then hands it
-    a frame over the rows :func:`cell_count_guard` collected, so the query
-    runs once. Any other sink gets the query's own frame after
-    :func:`cell_limit_count` and writes it from the executors."""
+    sets a class attribute ``collects = True``: the pipeline then calls
+    ``write(df, name, rows=table)`` with the Arrow table
+    :func:`cell_count_guard` collected from the query's frame ``df``, and
+    the sink publishes those rows without executing ``df``, so the query
+    runs once. Any other sink gets ``write(df, name)`` after
+    :func:`cell_limit_count` and writes ``df`` from the executors."""
 
     def write(self, df: DataFrame, name: str) -> None: ...
 

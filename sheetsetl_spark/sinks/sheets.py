@@ -22,11 +22,15 @@ keeping the upsert logic real and unit-testable with a fake client.
 
 from __future__ import annotations
 
-import io
 from collections.abc import Iterator
-from typing import Any, Protocol
+from typing import TYPE_CHECKING, Any, Protocol
 
 from pyspark.sql import DataFrame
+
+from sheetsetl_spark.sinks.base import cell_count_guard
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 SPREADSHEET_MIME = "application/vnd.google-apps.spreadsheet"
 
@@ -68,31 +72,53 @@ class GoogleSheetsSink:
         self,
         dest_folder: str,
         client: DriveClient | None = None,
-        max_driver_rows: int = 2_000_000,
         chunk_size: int = 256 * 1024,
         max_chunk_retries: int = 3,
     ):
+        # either below 1 would make _upload loop forever
+        for param, value in (("chunk_size", chunk_size), ("max_chunk_retries", max_chunk_retries)):
+            if value < 1:
+                raise ValueError(f"{param} must be >= 1, got {value!r}")
         self.dest_folder = dest_folder
         self.client = client
-        self.max_driver_rows = max_driver_rows
         self.chunk_size = chunk_size
         self.max_chunk_retries = max_chunk_retries
 
-    def _to_csv_bytes(self, df: DataFrame) -> bytes:
-        """Materialize the result as CSV on the driver.
+    def _to_csv_bytes(self, df: DataFrame, rows: pa.Table) -> bytes:
+        """Render the collected ``rows`` of ``df`` as the CSV payload.
 
-        Sheets is inherently a small-output sink (2M-cell cap upstream of
-        here), so a driver-side collect is correct; Arrow keeps the
-        transfer columnar. Under ``SqlFolderPipeline`` the frame holds the
-        rows the cell guard collected, so this is a local read. Guarded
-        against misuse on unguarded inputs.
+        The bytes are those of ``df.toPandas().to_csv(index=False)``, made
+        without running ``df``: each column goes through the converter
+        ``toPandas`` applies to its Arrow result, under ``df``'s schema
+        and its session's time zone. The schema must come from ``df``, not
+        from the Arrow table: read back from Arrow, a TIMESTAMP_NTZ column
+        looks like a session-zone timestamp and shifts by the zone offset.
         """
-        pdf = df.limit(self.max_driver_rows + 1).toPandas()
-        if len(pdf) > self.max_driver_rows:
-            raise ValueError("result exceeds driver materialization bound; guard upstream")
-        buf = io.StringIO()
-        pdf.to_csv(buf, index=False)
-        return buf.getvalue().encode()
+        import pandas as pd
+        from pyspark.sql.pandas.types import _create_converter_to_pandas
+
+        jconf = df.sparkSession._jconf
+        timezone = jconf.sessionLocalTimeZone()
+        struct_mode = jconf.pandasStructHandlingMode()
+        # positional names survive duplicate column names, as in toPandas
+        pdf = rows.rename_columns([f"col_{i}" for i in range(rows.num_columns)]).to_pandas(
+            date_as_object=True, coerce_temporal_nanoseconds=True
+        )
+        pdf.columns = df.columns
+        pdf = pd.concat(
+            [
+                _create_converter_to_pandas(
+                    field.dataType,
+                    field.nullable,
+                    timezone=timezone,
+                    struct_in_pandas="dict" if struct_mode == "legacy" else struct_mode,
+                    error_on_duplicated_field_names=struct_mode == "legacy",
+                )(pser)
+                for (_, pser), field in zip(pdf.items(), df.schema.fields)
+            ],
+            axis="columns",
+        )
+        return pdf.to_csv(index=False).encode()
 
     def _iter_folder(self) -> Iterator[dict[str, Any]]:
         """All folder children across pages (loader.py:113-122 loop)."""
@@ -121,13 +147,23 @@ class GoogleSheetsSink:
             offset += len(chunk)
         return result
 
-    def write(self, df: DataFrame, name: str) -> None:
+    def write(self, df: DataFrame, name: str, rows: pa.Table | None = None) -> None:
+        """Upsert sheet ``name`` with the result of ``df``.
+
+        ``rows`` are the rows :func:`cell_count_guard` collected from
+        ``df``, as ``SqlFolderPipeline`` passes them; they are published
+        without running ``df`` again. Without them the sink collects
+        through the same guard at the default cell limit, which raises
+        :class:`CellLimitExceeded` for a result too large for a sheet.
+        """
         if self.client is None:
             raise NotImplementedError(
                 "GoogleSheetsSink needs an injected DriveClient (no Google API "
                 "client/credentials in this environment; see module docstring)"
             )
-        csv_bytes = self._to_csv_bytes(df)
+        if rows is None:
+            rows = cell_count_guard(df, name)
+        csv_bytes = self._to_csv_bytes(df, rows)
         metadata = {
             "name": name,
             "mimeType": SPREADSHEET_MIME,

@@ -255,6 +255,25 @@ def test_sheets_sink_requires_client(spark):
         GoogleSheetsSink("folder1").write(spark.table("region"), "x")
 
 
+@pytest.mark.parametrize(
+    "param, value", [("chunk_size", 0), ("chunk_size", -1), ("max_chunk_retries", 0)]
+)
+def test_sheets_sink_rejects_upload_settings_below_one(param, value):
+    """Either setting below 1 would make the upload loop forever."""
+    with pytest.raises(ValueError, match=f"{param} must be >= 1"):
+        GoogleSheetsSink("folder1", client=FakeDrive(), **{param: value})
+
+
+def test_sheets_sink_direct_write_applies_the_cell_rule(spark):
+    """A write outside the pipeline collects through the same cell guard:
+    a result too large for a sheet is refused before any upload."""
+    drive = FakeDrive()
+    big = spark.range(1_000_000).selectExpr("id", "id AS b")  # (1M + 1) * 2 >= 2M
+    with pytest.raises(CellLimitExceeded):
+        GoogleSheetsSink("folder1", client=drive).write(big, "big")
+    assert drive.files == {} and drive.chunk_log == []
+
+
 def test_pipeline_concurrent_matches_serial(spark, sql_dir, tmp_path):
     sink = ParquetDirSink(str(tmp_path / "out_conc"))
     pipe = SqlFolderPipeline(
@@ -763,29 +782,30 @@ def test_pipeline_sheets_sink_per_file_isolation(spark, tmp_path):
     assert names_uploaded == {"a", "c"}
 
 
+def _validate_k_not_null(name, df):
+    from sheetsetl_spark.operators import quality_checks as qc
+    from sheetsetl_spark.pipeline.runner import ValidationFailed
+
+    report = qc.check_constraints(df, [qc.not_null("k")]).collect()
+    failed = [r["check_name"] for r in report if not r["passed"]]
+    if failed:
+        raise ValidationFailed(f"{name}: failed {failed}")
+
+
 def test_validate_hook_blocks_publishing(spark, tmp_path):
     """A quality-contract failure records validation_error and skips the
     sink for THAT file only; passing files still publish (the
     publish-or-block gate the reference lacks, loader.py:238-246)."""
     import os
 
-    from sheetsetl_spark.operators import quality_checks as qc
-    from sheetsetl_spark.pipeline.runner import ValidationFailed
-
     src = tmp_path / "sql"
     src.mkdir()
     (src / "good.sql").write_text("SELECT 1 AS k UNION ALL SELECT 2")
     (src / "bad.sql").write_text("SELECT 1 AS k UNION ALL SELECT NULL")
 
-    def validate(name, df):
-        report = qc.check_constraints(df, [qc.not_null("k")]).collect()
-        failed = [r["check_name"] for r in report if not r["passed"]]
-        if failed:
-            raise ValidationFailed(f"{name}: failed {failed}")
-
     sink = ParquetDirSink(str(tmp_path / "out"))
     report = SqlFolderPipeline(
-        spark, str(src), sink, validate=validate
+        spark, str(src), sink, validate=_validate_k_not_null
     ).run()
     by_name = {r.name: r for r in report.results}
     assert by_name["good.sql"[:-4]].status == "ok"
@@ -795,6 +815,36 @@ def test_validate_hook_blocks_publishing(spark, tmp_path):
     # the failing result was never published
     assert os.path.exists(sink.path_for("good"))
     assert not os.path.exists(sink.path_for("bad"))
+
+
+def test_validate_hook_on_a_collecting_sink(spark, tmp_path):
+    """On the Sheets sink the hook sees the guard's rows: a failing file
+    is never uploaded, and validating a UDF-filtered query does not run
+    it again (the UDF is called once per input row)."""
+    from pyspark.sql.types import BooleanType
+
+    n = 30
+    calls = spark.sparkContext.accumulator(0)
+
+    def bump(_x):
+        calls.add(1)
+        return True
+
+    spark.udf.register("bump_validated", bump, BooleanType())
+    src = tmp_path / "sql"
+    src.mkdir()
+    (src / "bad.sql").write_text("SELECT 1 AS k UNION ALL SELECT NULL")
+    (src / "good.sql").write_text(f"SELECT id AS k FROM range({n}) WHERE bump_validated(id)")
+    drive = FakeDrive()
+    report = SqlFolderPipeline(
+        spark, str(src), GoogleSheetsSink("folder1", client=drive), validate=_validate_k_not_null
+    ).run()
+    by_name = {r.name: r for r in report.results}
+    assert (by_name["good"].status, by_name["good"].rows) == ("ok", n)
+    assert by_name["bad"].status == "validation_error"
+    assert "not_null(k)" in by_name["bad"].error
+    assert set(drive.sheets()) == {"good"} and {f["name"] for f in drive.files.values()} == {"good"}
+    assert calls.value == n
 
 
 def test_spark_dialect_rejects_dml(spark, tmp_path):
@@ -890,12 +940,28 @@ def test_pipeline_runtime_errors_are_per_file(spark, tmp_path):
     assert set(drive.sheets()) == {"a_good", "d_good"}
 
 
-def test_pipeline_runs_each_query_once(spark, tmp_path):
+def test_pipeline_runs_each_query_once(spark, tmp_path, monkeypatch):
     """The guard's collect is the query's only execution: a Python UDF in
     the WHERE clause is called once per input row, not once for the
-    guard and again for the sink."""
+    guard and again for the sink, and no Spark job starts between the
+    guard's return and the upload."""
+    import uuid
+
     from pyspark.sql.types import BooleanType
 
+    from sheetsetl_spark.pipeline import runner
+
+    sc = spark.sparkContext
+    guard_group, after_group = (f"{tag}-{uuid.uuid4().hex}" for tag in ("guard", "after"))
+    guard = runner.cell_count_guard
+
+    def grouped_guard(df, name, limit):
+        sc.setJobGroup(guard_group, name)
+        table = guard(df, name, limit)
+        sc.setJobGroup(after_group, name)
+        return table
+
+    monkeypatch.setattr(runner, "cell_count_guard", grouped_guard)
     n = 40
     calls = spark.sparkContext.accumulator(0)
 
@@ -908,10 +974,17 @@ def test_pipeline_runs_each_query_once(spark, tmp_path):
     d.mkdir()
     (d / "udf_filter.sql").write_text(f"SELECT id FROM range({n}) WHERE bump_calls(id)")
     drive = FakeDrive()
-    report = SqlFolderPipeline(spark, str(d), GoogleSheetsSink("folder1", client=drive)).run()
+    try:
+        report = SqlFolderPipeline(spark, str(d), GoogleSheetsSink("folder1", client=drive)).run()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
     assert [(r.status, r.rows) for r in report.results] == [("ok", n)]
     assert calls.value == n
     assert len(drive.sheets()["udf_filter"].decode().splitlines()) == n + 1
+    tracker = sc.statusTracker()
+    assert tracker.getJobIdsForGroup(guard_group)  # the counting sees the guard's job
+    assert tracker.getJobIdsForGroup(after_group) == []
 
 
 def test_pipeline_keeps_query_row_order(spark, tmp_path):
@@ -1006,3 +1079,46 @@ def test_executor_side_sinks_write_the_query_frame(spark, tmp_path, monkeypatch)
     assert spark.table("months").selectExpr("CAST(ym AS STRING) AS s").first().s == (
         "INTERVAL '14' MONTH"
     )
+
+
+_PARITY_SQL = {
+    "scalars": "SELECT * FROM VALUES "
+    "(1, CAST(2 AS BIGINT), CAST(1.5 AS FLOAT), 2.25D, 'a,\"b\"', true, CAST(3 AS TINYINT)), "
+    "(-7, NULL, CAST('NaN' AS FLOAT), CAST('NaN' AS DOUBLE), NULL, NULL, NULL), "
+    "(NULL, 9, NULL, NULL, '', false, CAST(-1 AS TINYINT)) AS t(i, l, f, d, s, b, t)",
+    "temporal": "SELECT * FROM VALUES "
+    "(DATE'2024-03-10', TIMESTAMP'2024-03-10 02:30:00', TIMESTAMP_NTZ'2024-03-10 02:30:00', "
+    "INTERVAL '1 02:03:04.5' DAY TO SECOND), "
+    "(DATE'1899-12-31', TIMESTAMP'1899-12-31 23:59:59.123456', "
+    "TIMESTAMP_NTZ'2024-11-03 01:30:00', INTERVAL '-0 00:00:01' DAY TO SECOND), "
+    "(NULL, NULL, NULL, NULL) AS t(d, ts, ntz, dt)",
+    "nested": "SELECT * FROM VALUES "
+    "(CAST(12345.6789 AS DECIMAL(38, 10)), array(1, NULL, 3), map('a', 1, 'b', 2), "
+    "named_struct('x', 1, 'y', 'z'), CAST('ab,c' AS BINARY), NULL), "
+    "(NULL, NULL, NULL, named_struct('x', NULL, 'y', 'w'), NULL, NULL) AS t(dec, arr, m, st, bin, v)",
+    "empty": "SELECT id, CAST(id AS STRING) AS s, DATE'2024-01-01' AS d FROM range(0)",
+}
+
+
+def test_sheets_payload_matches_to_pandas(spark, tmp_path):
+    """The sheet published through the pipeline is byte for byte
+    df.toPandas().to_csv(index=False), for every column type a sheet
+    gets, under a UTC and a DST-observing session time zone."""
+    d = tmp_path / "parity_sql"
+    d.mkdir()
+    for name, sql in _PARITY_SQL.items():
+        (d / f"{name}.sql").write_text(sql)
+    key = "spark.sql.session.timeZone"
+    saved = spark.conf.get(key)
+    try:
+        for tz in ("UTC", "America/Los_Angeles"):
+            spark.conf.set(key, tz)
+            drive = FakeDrive()
+            report = SqlFolderPipeline(spark, str(d), GoogleSheetsSink("folder1", client=drive)).run()
+            assert [r.status for r in report.results] == ["ok"] * len(_PARITY_SQL), report.results
+            sheets = drive.sheets()
+            for name, sql in _PARITY_SQL.items():
+                expected = spark.sql(sql).toPandas().to_csv(index=False).encode()
+                assert sheets[name] == expected, (tz, name)
+    finally:
+        spark.conf.set(key, saved)
